@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bricolage_spark.session import artifact
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -41,40 +43,7 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Logical-plan handle memo: (session_token, abs sf_dir, table) -> DataFrame.
-# A DataFrame is an immutable, lazily-evaluated plan — NOT data: every
-# action on the memoized handle recomputes from the parquet files, so
-# this caches only the driver-side construction cost (two conf
-# round-trips, file listing, footer/schema read — measured ~0.12 s per
-# call, paid by every query build before this memo; guide §6's
-# file-listing-cache point at the API layer). Keyed by session token so
-# a stopped/restarted session can never be handed a dead Py4J reference.
-# Staleness caveat (same contract as the shingle cache): the handle
-# snapshots the file listing at first read — regenerating parquet under
-# the SAME sf_dir within one session requires release_tables(sf_dir).
-# Audited (r16, r15 ADVICE ask): no in-repo code path rewrites parquet
-# under an sf_dir this memo serves — the one in-place writer
-# (streaming_load's stage-and-move) targets the SparkEngine WAREHOUSE,
-# whose register() re-reads fresh and never touches this cache; test
-# fixtures use per-test tmp dirs. Anything new that regenerates an
-# sf_dir table must call release_tables(sf_dir).
-_TABLE_CACHE: dict = {}
-
-
-def release_tables(sf_dir: str | None = None) -> None:
-    """Drop memoized table handles (all, or one data dir's)."""
-    for key in [
-        k
-        for k in _TABLE_CACHE
-        if sf_dir is None or k[1] == os.path.abspath(sf_dir)
-    ]:
-        _TABLE_CACHE.pop(key)
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from bricolage_spark.session import session_token
-
-    key = (session_token(spark), os.path.abspath(sf_dir), name)
     # The driver's events.parquet carries TIMESTAMP(NANOS) — a type Spark's
     # parquet reader rejects outright. Read nanos as raw int64 and rebuild a
     # (microsecond) timestamp; set defensively here because the driver may
@@ -88,9 +57,25 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (session-UTC), not TIMESTAMP_NTZ — unix_micros()/window() reject NTZ
     # and the session timezone is pinned to UTC so values are identical.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _table_handle(spark, sf_dir, name)
+
+
+# Logical-plan handle memo. A DataFrame is an immutable, lazily-evaluated
+# plan — NOT data: every action on the memoized handle recomputes from the
+# parquet files, so this caches only the driver-side construction cost
+# (two conf round-trips, file listing, footer/schema read — measured
+# ~0.12 s per call, paid by every query build before this memo; guide
+# §6's file-listing-cache point at the API layer).
+# Staleness caveat (same contract as the staged artifacts): the handle
+# snapshots the file listing at first read — regenerating parquet under
+# the SAME sf_dir within one session requires ARTIFACTS.release(sf_dir).
+# Audited (r16, r15 ADVICE ask): no in-repo code path rewrites parquet
+# under an sf_dir this memo serves — the one in-place writer
+# (streaming_load's stage-and-move) targets the SparkEngine WAREHOUSE,
+# whose register() re-reads fresh and never touches this cache; test
+# fixtures use per-test tmp dirs.
+@artifact
+def _table_handle(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
@@ -101,7 +86,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             # Belt-and-suspenders: a frame scanned before the conf applied.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _TABLE_CACHE[key] = df
     return df
 
 

@@ -701,7 +701,10 @@ def ngram_jaccard_pairs(
         # strings — |A∩B|/|A|/|B| are digest-invariant (absent an
         # in-pair collision, ~|A|·|B|/2⁶⁴), and the set aggregation +
         # both verify joins shuffle ~4× fewer bytes per shingle. The
-        # staged path (callers passing ``sets``) stores digests too
+        # n_inter > 0 drop contract below also holds only up to such a
+        # collision: a cross-doc xxhash64 collision can keep a candidate
+        # whose true intersection is empty. The staged path (callers
+        # passing ``sets``) stores digests too
         # (llm_ops._doc_shingle_sets).
         sets = shingles.groupBy(id_col).agg(
             F.collect_set(F.xxhash64("shingle")).alias("sh_set")

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bricolage_spark.catalog import spread
+from bricolage_spark.session import ARTIFACTS
 
 
 def _as_double(col: Column) -> Column:
@@ -177,20 +178,11 @@ def plane_components(plane: int, dims: int) -> list[float]:
 # Parsed-Column memo for the generated-SQL builders below: a pyspark
 # Column is an immutable expression handle, so the (one-off ~0.1 s) JVM
 # parse of each ~20 KB literal-heavy string is paid once per session,
-# not once per query. Keyed by the full generating arguments PLUS the
-# session token — a Column is a live Py4J handle, and a restarted session
-# must re-parse rather than inherit a dead reference.
-_EXPR_CACHE: dict = {}
-
-
+# not once per query. Keyed by the full generating arguments; the
+# artifact cache adds the session token, so a restarted session re-parses
+# rather than inherit a dead Py4J reference.
 def _memo_expr(key: tuple, sql: str) -> Column:
-    from bricolage_spark.session import session_token
-
-    k = (session_token(),) + key
-    col = _EXPR_CACHE.get(k)
-    if col is None:
-        col = _EXPR_CACHE[k] = F.expr(sql)
-    return col
+    return ARTIFACTS.get(None, None, "expr", key, lambda: F.expr(sql))
 
 
 def _dbl_sql(x: float) -> str:
@@ -283,6 +275,11 @@ def srp_band_buckets(
 # ---------------------------------------------------------------------------
 
 
+# Past this many inlined centroid literals (k_cells x dims) the Lloyd
+# labelling switches from the literal argmax chain to a broadcast join.
+_LITERAL_CENTROID_LIMIT = 1024
+
+
 def ivf_centroids(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -326,7 +323,7 @@ def ivf_centroids(
     seed_cents = [(i, list(r["v"])) for i, r in enumerate(seeds)]
 
     dims = len(seed_cents[0][1]) if seed_cents else 0
-    if k_cells * dims > 1024:
+    if k_cells * dims > _LITERAL_CENTROID_LIMIT:
         # r16 (guide §1.2 per-task work): past ~1k inlined centroid
         # literals the argmin chain blows the whole-stage-codegen method
         # limit and the Lloyd labeling runs interpreted — the exact
@@ -352,9 +349,16 @@ def ivf_centroids(
             ],
             "cell int, ce array<double>, cn double",
         )
-        vecs = corpus.select(F.col(id_col), vd.alias("v"), norm(vd).alias("nv"))
+        # labelled per ROW, like the literal branch below: a row tag, not
+        # id_col, keys the argmax, so duplicate ids train the same
+        # centroids on both sides of the gate
+        vecs = corpus.select(
+            F.monotonically_increasing_id().alias("_row"),
+            vd.alias("v"),
+            norm(vd).alias("nv"),
+        )
         scored = vecs.join(F.broadcast(cdf)).select(
-            id_col,
+            "_row",
             "v",
             "cell",
             F.round(
@@ -365,7 +369,7 @@ def ivf_centroids(
             ).alias("sim"),
         )
         labeled = (
-            scored.groupBy(id_col)
+            scored.groupBy("_row")
             .agg(
                 F.max_by(
                     F.struct("cell", "v"),

@@ -10,7 +10,6 @@ replace; ``//`` vs ``/``; ``range()`` end-exclusive.
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,7 +23,7 @@ from bricolage_spark.operators import multimodal as M
 from bricolage_spark.operators import similarity as S
 from bricolage_spark.operators import textual as T
 from bricolage_spark.queries import QUERIES, register
-from bricolage_spark.session import session_token
+from bricolage_spark.session import ARTIFACTS, artifact
 
 # Shared oracle CTE: normalized documents + word arrays (mirrors
 # operators.dedup.normalize_text exactly, incl. the 'g' flag).
@@ -53,29 +52,27 @@ _SHINGLES_CTE = f"""
     )
 """
 
+
+def _persisted(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and materialise it: the build of a staged artifact
+    returns only once its data is stored."""
+    df = df.persist()
+    df.count()
+    return df
+
+
 # Shared word-3-shingle corpus: q32, q33, and q48 all consume the SAME
 # explode+distinct shingle set, which is the expensive step of each (one
 # row per distinct (doc, shingle)). Build and persist it once per corpus —
 # the same index-build/serve split as q49's IVF cache. At 100 TB this is
 # the materialized shingle table a dedup pipeline would write to storage
-# once and join against from every pass. Named, keyed, droppable via
-# ``release_shingles()``.
-_SHINGLE_CACHE: dict = {}
-
-
-def _doc_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    # session_token in the key: a persisted DataFrame is a live handle into
-    # one JVM session — after stop/restart the new session must miss and
-    # rebuild, never receive a dead reference. Stale-data caveat: keys are
-    # per-path, so regenerating parquet under the SAME sf_dir requires an
-    # explicit release_shingles(sf_dir) (documented on release_caches()).
-    key = (session_token(spark), sf_dir, k)
-    sh = _SHINGLE_CACHE.get(key)
-    if sh is None:
-        docs = read_table(spark, sf_dir, "documents")
-        sh = D.word_shingles(docs, "doc_id", "text", k=k).persist()
-        _SHINGLE_CACHE[key] = sh
-    return sh
+# once and join against from every pass. Staleness caveat: entries are
+# per-path, so regenerating parquet under the SAME sf_dir requires an
+# explicit ``ARTIFACTS.release(sf_dir)``.
+@artifact
+def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = read_table(spark, sf_dir, "documents")
+    return _persisted(D.word_shingles(docs, "doc_id", "text", k=3))
 
 
 # Derived members of the staged shingle index, materialized alongside the
@@ -83,43 +80,31 @@ def _doc_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
 #   freq — per-shingle document frequency (the inverted index's df column)
 #   sets — per-doc shingle set + size (the forward index)
 # Consumers (q48 verify, q53 heavy hitters) serve from these instead of
-# re-aggregating the posting table per query. Same keying/release
-# discipline as the posting cache.
-_SHINGLE_AUX_CACHE: dict = {}
-
-
+# re-aggregating the posting table per query.
+@artifact
 def _shingle_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_token(spark), sf_dir, "freq")
-    freq = _SHINGLE_AUX_CACHE.get(key)
-    if freq is None:
-        freq = (
-            _doc_shingles(spark, sf_dir)
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("dfc"))
-            .persist()
+    return _persisted(
+        _doc_shingles(spark, sf_dir)
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("dfc"))
+    )
+
+
+@artifact
+def _shingle_rare(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PRUNED inverted index (shingles with df <= _NJ_MAX_DF) — the
+    table an exact near-dup pass self-joins; boilerplate shingles are
+    dropped at index-build time, once, not per query."""
+    sh = _doc_shingles(spark, sf_dir)
+    freq = _shingle_freq(spark, sf_dir)
+    return _persisted(
+        sh.join(freq.filter(F.col("dfc") <= _NJ_MAX_DF), "shingle").select(
+            "doc_id", "shingle"
         )
-        _SHINGLE_AUX_CACHE[key] = freq
-    return freq
+    )
 
 
-def _shingle_rare(spark: SparkSession, sf_dir: str, max_df: int) -> DataFrame:
-    """The PRUNED inverted index (shingles with df <= max_df) — the table
-    an exact near-dup pass self-joins; boilerplate shingles are dropped
-    at index-build time, once, not per query."""
-    key = (session_token(spark), sf_dir, f"rare{max_df}")
-    rare = _SHINGLE_AUX_CACHE.get(key)
-    if rare is None:
-        sh = _doc_shingles(spark, sf_dir)
-        freq = _shingle_freq(spark, sf_dir)
-        rare = (
-            sh.join(freq.filter(F.col("dfc") <= max_df), "shingle")
-            .select("doc_id", "shingle")
-            .persist()
-        )
-        _SHINGLE_AUX_CACHE[key] = rare
-    return rare
-
-
+@artifact
 def _doc_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 (guide §2.3, narrower shuffle keys): the forward index stores
     # per-doc sets of 8-byte xxhash64 DIGESTS, not shingle strings. The
@@ -136,62 +121,25 @@ def _doc_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # steady-state — it re-pays the normalize+shingle CPU the postings
     # build already spent, and contended badly inside the staging pool,
     # so the postings-derived aggregation stays.
-    key = (session_token(spark), sf_dir, "sets")
-    sets = _SHINGLE_AUX_CACHE.get(key)
-    if sets is None:
-        sets = (
-            _doc_shingles(spark, sf_dir)
-            .groupBy("doc_id")
-            .agg(F.collect_set(F.xxhash64("shingle")).alias("sh_set"))
-            .persist()
-        )
-        _SHINGLE_AUX_CACHE[key] = sets
-    return sets
+    return _persisted(
+        _doc_shingles(spark, sf_dir)
+        .groupBy("doc_id")
+        .agg(F.collect_set(F.xxhash64("shingle")).alias("sh_set"))
+    )
 
 
+@artifact
 def _bench_shingle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STAGED benchmark shingle-count table (shingle, bc): the eval
     set's index, fixed-size while the corpus grows — q51 joins the
     counts, q90 uses the keys. A decontamination pipeline materializes
     this once per benchmark release, not per scrub."""
-    key = (session_token(spark), sf_dir, "benchcount")
-    bc = _SHINGLE_AUX_CACHE.get(key)
-    if bc is None:
-        bc = (
-            _doc_shingles(spark, sf_dir)
-            .filter(F.col("doc_id") % _CONTAM_MOD == 0)
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("bc"))
-            .persist()
-        )
-        _SHINGLE_AUX_CACHE[key] = bc
-    return bc
-
-
-def release_shingles(sf_dir: str | None = None) -> None:
-    """Drop cached shingle frames (all, or one corpus').
-
-    Unpersist only handles belonging to the LIVE session: entries keyed
-    by a stopped session's token are dead Py4J references — their JVM-side
-    storage died with the session, so dropping the dict entry is the whole
-    cleanup (calling unpersist on them raises an NPE from the driver
-    endpoint, observed when bench blocks restart the session).
-    """
-    live = session_token()
-    for key in [k for k in _SHINGLE_CACHE if sf_dir is None or k[1] == sf_dir]:
-        df = _SHINGLE_CACHE.pop(key)
-        if key[0] == live:
-            df.unpersist(blocking=False)
-    for key in [k for k in _SHINGLE_AUX_CACHE if sf_dir is None or k[1] == sf_dir]:
-        df = _SHINGLE_AUX_CACHE.pop(key)
-        if key[0] == live:
-            df.unpersist(blocking=False)
-    for key in [k for k in _PMI_UNI_CACHE if sf_dir is None or k[1] == sf_dir]:
-        df = _PMI_UNI_CACHE.pop(key)
-        # q73 memoizes its (total1, n_docs) corpus constants in the same
-        # cache; only DataFrame entries hold executor storage to release
-        if key[0] == live and hasattr(df, "unpersist"):
-            df.unpersist(blocking=False)
+    return _persisted(
+        _doc_shingles(spark, sf_dir)
+        .filter(F.col("doc_id") % _CONTAM_MOD == 0)
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("bc"))
+    )
 
 
 # --------------------------------------------------------------------------
@@ -950,7 +898,7 @@ def q48(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingles=_doc_shingles(spark, sf_dir),
         freq=_shingle_freq(spark, sf_dir),
         sets=_doc_shingle_sets(spark, sf_dir),
-        rare=_shingle_rare(spark, sf_dir, _NJ_MAX_DF),
+        rare=_shingle_rare(spark, sf_dir),
     )
 
 
@@ -958,7 +906,25 @@ def q48(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q49 IVF ANN (trained coarse quantizer — the FAISS-style scale path)
 # --------------------------------------------------------------------------
 _IVF_CELLS, _IVF_NPROBE, _IVF_SEED = 8, 2, 4242
-_IVF_MODEL_CACHE: dict = {}
+
+
+@artifact
+def _centroids(spark: SparkSession, sf_dir: str, cells: int) -> list:
+    """Trained IVF coarse quantizer over the embeddings (``cells``
+    centroids, driver metadata): q49/q68 train 8 cells, SemDeDup
+    ``_SEM_CELLS``. Training is deterministic (md5 seeding, 6-dp rounded
+    Lloyd step), so the memo returns bit-identical centroids."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    return S.ivf_centroids(emb, k_cells=cells, seed=_IVF_SEED)
+
+
+@artifact
+def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus labeled with its q49 cell — the inverted-list layout,
+    materialized once per corpus (at 100 TB: the partitionBy(cell) corpus
+    layout on storage)."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    return _persisted(S.ivf_index(emb, _centroids(spark, sf_dir, _IVF_CELLS)))
 
 
 def _ivf_a1_ctes(dims: int = 64, cells: int | None = None) -> str:
@@ -1071,37 +1037,17 @@ def q49(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Index-build / serve separation, as a real IVF deployment does it: the
     # coarse quantizer is TRAINED once per corpus (two metadata-scale jobs)
     # and the labeled inverted-list layout is MATERIALIZED once; every
-    # query then probes it. Training is deterministic (md5 seeding, 6-dp
-    # rounded Lloyd step), so the cache returns bit-identical results — at
-    # 100 TB this cache is the persisted centroid table plus the
-    # partitionBy(cell) corpus layout on storage. Release with
-    # ``release_ivf_index()`` (a long-lived engine must not accumulate
-    # anonymous caches; this one is named, keyed, and droppable).
-    key = (session_token(spark), sf_dir, _IVF_CELLS, _IVF_SEED)
-    entry = _IVF_MODEL_CACHE.get(key)
-    if entry is None:
-        cents = S.ivf_centroids(emb, k_cells=_IVF_CELLS, seed=_IVF_SEED)
-        index = S.ivf_index(emb, cents).persist()
-        entry = (cents, index)
-        _IVF_MODEL_CACHE[key] = entry
-    cents, index = entry
+    # query then probes it.
+    cents = _centroids(spark, sf_dir, _IVF_CELLS)
     queries = emb.filter(F.col("vec_id") < _NQ)
     return S.ivf_topk(
-        emb, queries, cents, k=_K, nprobe=_IVF_NPROBE, index=index
+        emb,
+        queries,
+        cents,
+        k=_K,
+        nprobe=_IVF_NPROBE,
+        index=_ivf_index(spark, sf_dir),
     )
-
-
-def release_ivf_index(sf_dir: str | None = None) -> None:
-    """Drop cached IVF models (all, or one corpus') and unpersist indexes.
-
-    Same live-session guard as ``release_shingles``: a dead session's
-    index handle is dropped, not unpersisted.
-    """
-    live = session_token()
-    for key in [k for k in _IVF_MODEL_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _cents, index = _IVF_MODEL_CACHE.pop(key)
-        if key[0] == live:
-            index.unpersist(blocking=False)
 
 
 # --------------------------------------------------------------------------
@@ -1140,48 +1086,32 @@ def q50(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Staged artifact cache: the Jaccard-verified near-dup pair table is what
-# a dedup pipeline MATERIALIZES between its verify and cluster stages (at
+# Staged artifact: the Jaccard-verified near-dup pair table is what a
+# dedup pipeline MATERIALIZES between its verify and cluster stages (at
 # 100 TB: written to storage once, read by clustering/reporting). q50
 # clusters the staged table; q33 — whose deliverable IS the pair
 # computation — always recomputes its own.
-_PAIR_CACHE: dict = {}
-
-
+@artifact
 def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint caveat: checkpoint blocks live on executors, so on a
     # real cluster this cached frame does NOT survive executor loss — the
     # production shape of this stage is a reliable materialization (write
     # the pair table to storage, read it back), which is exactly what the
-    # cache stands in for at test scale. Session-keyed like the others.
-    key = (session_token(spark), sf_dir)
-    pairs = _PAIR_CACHE.get(key)
-    if pairs is None:
-        sh = _doc_shingles(spark, sf_dir).withColumnRenamed("doc_id", "id")
-        sigs = D.minhash_signatures(sh, "id", num_hashes=_N_HASHES)
-        cand = D.lsh_candidate_pairs(
-            sigs,
-            "id",
-            bands=_BANDS,
-            rows_per_band=_ROWS_PER_BAND,
-            max_bucket=_MAX_BUCKET,  # the cap the oracle CTEs embed
-        )
-        sets = _doc_shingle_sets(spark, sf_dir).withColumnRenamed(
-            "doc_id", "id"
-        )
-        jac = D.ngram_jaccard_pairs(sh, cand, id_col="id", sets=sets).filter(
-            F.col("jaccard") >= _JACCARD_MIN
-        )
-        pairs = _PAIR_CACHE[key] = jac.localCheckpoint(eager=True)
-    return pairs
-
-
-def release_pairs(sf_dir: str | None = None) -> None:
-    """Drop cached verified-pair frames (all, or one corpus')."""
-    for key in [k for k in _PAIR_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _PAIR_CACHE.pop(key)
-    for key in [k for k in _CC_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _CC_CACHE.pop(key)
+    # cache stands in for at test scale.
+    sh = _doc_shingles(spark, sf_dir).withColumnRenamed("doc_id", "id")
+    sigs = D.minhash_signatures(sh, "id", num_hashes=_N_HASHES)
+    cand = D.lsh_candidate_pairs(
+        sigs,
+        "id",
+        bands=_BANDS,
+        rows_per_band=_ROWS_PER_BAND,
+        max_bucket=_MAX_BUCKET,  # the cap the oracle CTEs embed
+    )
+    sets = _doc_shingle_sets(spark, sf_dir).withColumnRenamed("doc_id", "id")
+    jac = D.ngram_jaccard_pairs(sh, cand, id_col="id", sets=sets).filter(
+        F.col("jaccard") >= _JACCARD_MIN
+    )
+    return jac.localCheckpoint(eager=True)
 
 
 # Cluster-assignment table: the OTHER artifact the dedup pipeline's
@@ -1189,20 +1119,13 @@ def release_pairs(sf_dir: str | None = None) -> None:
 # clustering computation; q61 (and any later keep/drop stage) consumes
 # the staged assignment exactly as production would read the table the
 # cluster job wrote to storage. localCheckpoint caveat as above.
-_CC_CACHE: dict = {}
-
-
+@artifact
 def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bricolage_spark.operators.graph import connected_components
 
-    key = (session_token(spark), sf_dir)
-    cc = _CC_CACHE.get(key)
-    if cc is None:
-        cc = connected_components(
-            _verified_pairs(spark, sf_dir), "id_a", "id_b"
-        ).localCheckpoint(eager=True)
-        _CC_CACHE[key] = cc
-    return cc
+    return connected_components(
+        _verified_pairs(spark, sf_dir), "id_a", "id_b"
+    ).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -1422,43 +1345,9 @@ def q54(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def release_caches() -> None:
-    """Engine hygiene for long-lived processes: drop every named corpus
-    cache (shingles, staged pairs, IVF indexes). Percentile memos are
-    plain floats and are cleared too."""
-    from bricolage_spark.queries import relational
-
-    from bricolage_spark.queries import patterns
-
-    release_shingles()
-    release_pairs()
-    release_ivf_index()
-    release_lm()
-    release_spans()
-    release_sem_assignment()
-    release_bm25()
-    release_dsir()
-    release_swc()
-    release_bpe()
-    release_sent_df()
-    release_srp_bands()
-    release_fingerprints()
-    _SEM_CENT_CACHE.clear()
-    relational._PCT_CACHE.clear()
-    patterns._HOT_KEY_CACHE.clear()
-    # localCheckpoint-backed artifacts (verified pairs, cluster
-    # assignments, span table) free their executor blocks only after
-    # the JVM notices the checkpoint RDD is unreachable (py4j ref
-    # dropped -> JVM GC -> ContextCleaner). A long-lived driver with a
-    # quiet old-gen can sit on gigabytes of dead blocks for a long
-    # time — the r12 64x octave exhausted the unified pool exactly
-    # that way (storage squeezed execution across sequential heavy
-    # probes). Nudge the chain; ContextCleaner does the actual free.
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass  # no JVM (stopped session) — nothing to free
+    """Engine hygiene for long-lived processes: drop every staged
+    artifact, table handle and parsed expression of the artifact cache."""
+    ARTIFACTS.release()
 
 
 #: Per-artifact build seconds of the most recent stage_artifacts() call
@@ -1466,163 +1355,87 @@ def release_caches() -> None:
 LAST_STAGE_TIMINGS: dict[str, float] = {}
 
 
-def stage_artifacts(
-    spark: SparkSession, sf_dir: str, max_workers: int | None = None
-) -> list[str]:
+def stage_artifacts(spark: SparkSession, sf_dir: str) -> list[str]:
     """Eagerly build + materialize every named staged artifact for one
     corpus — the explicit 'index build' step a production pipeline runs
     before its serve stages. bench.py calls this once per block and
     charges the cost to a separate labeled ``artifact_build`` row, so no
     query's measured time depends on which staged query happens to run
-    first. Returns the artifact names built.
+    first. Returns the artifact names built, in list order.
 
-    Artifacts (all session-keyed, released by release_caches()):
-    shingle postings + df/pruned/sets aux tables, Jaccard-verified pair
-    table, cluster assignments, IVF centroids+index, PMI unigram table,
-    bigram LM counts, span table, SemDeDup assignments, lineitem
-    percentile brackets, orders hot-key stats, BM25 postings + corpus
-    stats.
+    The artifacts live in the session's artifact cache (released by
+    release_caches()), so a second call builds nothing.
 
-    Independent artifact FAMILIES build concurrently (optimization-guide
-    §2.6: actions are only sequential because driver code calls them
-    sequentially; a few jobs in flight let the next family's tasks
-    back-fill the executors the current family's stage tail leaves
-    idle — most of these builds are short multi-stage jobs whose
-    per-stage scheduling floor, not data volume, dominates). Dependency
-    chains (shingle postings → its aux tables → verified pairs →
-    clusters; fingerprints → postings; SRP bands → registry) stay
-    ordered WITHIN their chain; each chain runs on one worker thread.
-    ``max_workers`` defaults to $SPARK_GRAFT_STAGE_WORKERS (8 — measured
-    sweep at sf0.1: 1 worker 51.0 s, 4 workers 30.4 s, 8 workers 24.7 s,
-    close to the dependency-chain floor of the longest pole; 1
-    reproduces the historical sequential build). Each artifact's job is labeled (§1.5) and its wall seconds
-    recorded in LAST_STAGE_TIMINGS.
+    The list is dependency-ordered and runs on an 8-thread pool (a sweep
+    at sf0.1 over the earlier per-chain layout: 1 worker 51.0 s, 4
+    workers 30.4 s, 8 workers 24.7 s). Optimization-guide §2.6: actions
+    are only sequential because driver code calls them sequentially; a
+    few jobs in flight let the next artifact's tasks back-fill the
+    executors the current one's stage tail leaves idle — most of these
+    builds are short multi-stage jobs whose per-stage scheduling floor,
+    not data volume, dominates.
 
-    Threading assumptions (r15 ADVICE, documented): per-thread job
-    descriptions rely on pinned-thread mode (``PYSPARK_PIN_THREAD``,
-    the default since Spark 3.2) — without it the labels (observability
-    only, never semantics) can cross-talk between chains. Cache-key
-    races are excluded by CONSTRUCTION, not locking: the shared
-    upstream (``_doc_shingles``) materializes before the pool starts,
-    and every other session-keyed cache (_SHINGLE_AUX_CACHE entries,
-    _PAIR_CACHE, _CC_CACHE, IVF/BM25/LM/etc.) is written by exactly one
-    chain, with intra-chain order covering its readers — so no two
-    threads can build (and orphan) the same persisted frame. A new
-    artifact must keep that invariant: add it to the chain that builds
-    the caches it touches.
+    The cache's per-artifact build lock orders dependencies: an artifact
+    whose build needs another (shingle postings → its aux tables →
+    verified pairs → clusters; fingerprints → postings; SRP bands →
+    registry; centroids → IVF index) waits until that one is built, by
+    whichever thread got to it first. So an artifact's time in
+    LAST_STAGE_TIMINGS can include waiting on a dependency another
+    thread is building, and its Spark jobs can carry that thread's
+    label.
+
+    Each artifact's jobs are labeled (§1.5) via per-thread job
+    descriptions, which rely on pinned-thread mode
+    (``PYSPARK_PIN_THREAD``, the default since Spark 3.2) — labels are
+    observability only, never semantics.
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    from bricolage_spark.queries import patterns, relational
+    from bricolage_spark.queries.patterns import _orders_hot_keys
+    from bricolage_spark.queries.relational import _lineitem_price_pcts
 
-    if max_workers is None:
-        max_workers = max(1, int(os.environ.get("SPARK_GRAFT_STAGE_WORKERS", "8")))
-
+    artifacts = [
+        ("shingle_postings", _doc_shingles),
+        ("shingle_sets", _doc_shingle_sets),
+        ("verified_pairs", _verified_pairs),
+        ("cluster_assignments", _components),
+        ("bpe_merges", _bpe_merge_table),
+        ("semdedup_assignments", _sem_assignment),
+        ("lm_counts", _lm_counts),
+        ("ivf_index", _ivf_index),
+        ("shingle_df", _shingle_freq),
+        ("shingle_pruned", _shingle_rare),
+        ("bench_shingle_counts", _bench_shingle_counts),
+        ("srp_bands", _srp_bands),
+        ("srp_registry", _srp_registry),
+        ("fingerprints", _staged_fingerprints),
+        ("fp_postings", _staged_fp_postings),
+        ("span_table", _staged_spans),
+        ("bm25_index", _bm25_staged),
+        ("dsir_ratio", _dsir_ratio),
+        ("source_word_counts", _swc_counts),
+        ("pmi_unigrams", _pmi_unigrams),
+        ("pmi_bigrams", _pmi_bigrams),
+        ("sentence_digest_df", _sent_digest_df),
+        ("percentile_brackets", _lineitem_price_pcts),
+        ("hot_key_stats", _orders_hot_keys),
+    ]
     timings: dict[str, float] = {}
 
-    def _mat(name: str, thunk) -> None:
+    def _mat(name: str, build) -> None:
         spark.sparkContext.setJobDescription(f"stage_artifacts: {name}")
         t0 = time.perf_counter()
-        thunk()
+        build(spark, sf_dir)
         timings[name] = round(time.perf_counter() - t0, 3)
         spark.sparkContext.setJobDescription(None)
 
-    def _build_ivf() -> None:
-        key = (session_token(spark), sf_dir, _IVF_CELLS, _IVF_SEED)
-        if key not in _IVF_MODEL_CACHE:
-            emb = read_table(spark, sf_dir, "embeddings")
-            cents = S.ivf_centroids(emb, k_cells=_IVF_CELLS, seed=_IVF_SEED)
-            _IVF_MODEL_CACHE[key] = (cents, S.ivf_index(emb, cents).persist())
-        _IVF_MODEL_CACHE[key][1].count()
-
-    def _build_pcts() -> None:
-        relational._lineitem_price_pcts(
-            read_table(spark, sf_dir, "lineitem"), sf_dir
-        )
-
-    def _build_hot_keys() -> None:
-        from bricolage_spark.operators.skew import detect_hot_keys
-
-        hk = (session_token(spark), sf_dir, "orders", "c_custkey")
-        if hk not in patterns._HOT_KEY_CACHE:
-            o = read_table(spark, sf_dir, "orders").withColumnRenamed(
-                "o_custkey", "c_custkey"
-            )
-            patterns._HOT_KEY_CACHE[hk] = detect_hot_keys(o, "c_custkey")
-
-    def _build_bm25() -> None:
-        p, c = _bm25_staged(spark, sf_dir)
-        p.count()
-        c.count()
-
-    # The shared upstream of every shingle-derived chain: materialize it
-    # first, alone (its explode+dedup uses the whole machine anyway), so
-    # the concurrent chains below all serve from the finished cache
-    # instead of racing to build it.
-    _mat("shingle_postings", lambda: _doc_shingles(spark, sf_dir).count())
-
-    # Independent chains, heaviest first (pool drains longest-pole-first
-    # so the tail stays short). Each entry is an ordered list of
-    # (artifact_name, thunk); a worker runs its chain in order.
-    chains: list[list[tuple[str, object]]] = [
-        [
-            # sets first: the pair verify (and q33/q48) serve from it
-            ("shingle_sets", lambda: _doc_shingle_sets(spark, sf_dir).count()),
-            ("verified_pairs", lambda: _verified_pairs(spark, sf_dir).count()),
-            ("cluster_assignments", lambda: _components(spark, sf_dir).count()),
-        ],
-        [("bpe_merges", lambda: _bpe_merges(spark, sf_dir))],
-        [("semdedup_assignments", lambda: _sem_assignment(spark, sf_dir).count())],
-        [("lm_counts", lambda: _lm_counts(spark, sf_dir))],
-        [("ivf_index", _build_ivf)],
-        [
-            ("shingle_df", lambda: _shingle_freq(spark, sf_dir).count()),
-            (
-                "shingle_pruned",
-                lambda: _shingle_rare(spark, sf_dir, _NJ_MAX_DF).count(),
-            ),
-            (
-                "bench_shingle_counts",
-                lambda: _bench_shingle_counts(spark, sf_dir).count(),
-            ),
-        ],
-        [
-            ("srp_bands", lambda: _srp_bands(spark, sf_dir).count()),
-            ("srp_registry", lambda: _srp_registry(spark, sf_dir).count()),
-        ],
-        [
-            ("fingerprints", lambda: _staged_fingerprints(spark, sf_dir)),
-            ("fp_postings", lambda: _staged_fp_postings(spark, sf_dir)),
-        ],
-        [("span_table", lambda: _staged_spans(spark, sf_dir).count())],
-        [("bm25_index", _build_bm25)],
-        [("dsir_ratio", lambda: _dsir_ratio(spark, sf_dir))],
-        [("source_word_counts", lambda: _swc_counts(spark, sf_dir))],
-        [
-            ("pmi_unigrams", lambda: _pmi_unigrams(spark, sf_dir).count()),
-            ("pmi_bigrams", lambda: _pmi_bigrams(spark, sf_dir).count()),
-        ],
-        [("sentence_digest_df", lambda: _sent_digest_df(spark, sf_dir).count())],
-        [("percentile_brackets", _build_pcts)],
-        [("hot_key_stats", _build_hot_keys)],
-    ]
-
-    def _run_chain(chain: list[tuple[str, object]]) -> None:
-        for name, thunk in chain:
-            _mat(name, thunk)
-
-    if max_workers <= 1:
-        for chain in chains:
-            _run_chain(chain)
-    else:
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            # materialize exceptions (and preserve submission order)
-            for f in [pool.submit(_run_chain, c) for c in chains]:
-                f.result()
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        for f in [pool.submit(_mat, n, b) for n, b in artifacts]:
+            f.result()
 
     LAST_STAGE_TIMINGS.clear()
     LAST_STAGE_TIMINGS.update(timings)
-    return ["shingle_postings"] + [n for chain in chains for n, _ in chain]
+    return [name for name, _ in artifacts]
 
 
 # --------------------------------------------------------------------------
@@ -1877,33 +1690,17 @@ def q60(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-keyed staged BM25 index (postings + corpus stats), same
-# keying/release discipline as the shingle index. Serve = dfreq
-# broadcast + per-query top-k window; the corpus is never rescanned.
-_BM25_CACHE: dict = {}
-
-
+# Staged BM25 index (postings + corpus stats) over the terms of
+# _BM25_QUERIES. Serve = dfreq broadcast + per-query top-k window; the
+# corpus is never rescanned.
+@artifact
 def _bm25_staged(spark: SparkSession, sf_dir: str):
     from bricolage_spark.operators.retrieval import bm25_index
 
     all_terms = sorted({t for q in _BM25_QUERIES.values() for t in q.split()})
-    key = (session_token(spark), sf_dir, "bm25", tuple(all_terms))
-    entry = _BM25_CACHE.get(key)
-    if entry is None:
-        docs = read_table(spark, sf_dir, "documents")
-        postings, corpus = bm25_index(docs, all_terms, "doc_id", "text")
-        entry = _BM25_CACHE[key] = (postings.persist(), corpus.persist())
-    return entry
-
-
-def release_bm25(sf_dir: str | None = None) -> None:
-    """Drop cached BM25 index tables (all, or one corpus')."""
-    live = session_token()
-    for key in [k for k in _BM25_CACHE if sf_dir is None or k[1] == sf_dir]:
-        postings, corpus = _BM25_CACHE.pop(key)
-        if key[0] == live:
-            postings.unpersist(blocking=False)
-            corpus.unpersist(blocking=False)
+    docs = read_table(spark, sf_dir, "documents")
+    postings, corpus = bm25_index(docs, all_terms, "doc_id", "text")
+    return _persisted(postings), _persisted(corpus)
 
 
 # --------------------------------------------------------------------------
@@ -2248,14 +2045,7 @@ def q67(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q68(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
-    key = (session_token(spark), sf_dir, _IVF_CELLS, _IVF_SEED)
-    entry = _IVF_MODEL_CACHE.get(key)
-    if entry is None:
-        cents = S.ivf_centroids(emb, k_cells=_IVF_CELLS, seed=_IVF_SEED)
-        index = S.ivf_index(emb, cents).persist()
-        entry = (cents, index)
-        _IVF_MODEL_CACHE[key] = entry
-    cents, _index = entry
+    cents = _centroids(spark, sf_dir, _IVF_CELLS)
     assign = spread(emb, "vec_id").select(
         F.col("vec_id"),
         S.ivf_assignment("embedding", cents).alias("a"),
@@ -2480,69 +2270,52 @@ def q72(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _PMI_MIN, _PMI_TOP = 5, 50
 
-# Session-keyed persisted unigram table for q73 (same keying/release
-# discipline as the shingle index; released via release_caches()).
-_PMI_UNI_CACHE: dict = {}
 
-
+@artifact
 def _pmi_unigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus unigram counts, PERSISTED (vocab-scale, session-keyed like
-    the shingle index): q73's totals action materializes it once, and the
-    final PMI job serves its two word-count joins from the cache instead
-    of re-exploding the corpus. Kept as its own explode+agg: deriving
-    unigrams from the bigram table (w1 fold + per-doc last words) was
-    measured SLOWER — no ReusedExchange across the two consumers, so the
-    corpus explode ran twice plus an extra union shuffle."""
-    key = (session_token(spark), sf_dir, "pmi_uni")
-    uni = _PMI_UNI_CACHE.get(key)
-    if uni is None:
-        docs = read_table(spark, sf_dir, "documents")
-        words = F.split(D.normalize_text(F.col("text")), " ")
-        uni = (
-            spread(docs, "doc_id")
-            .select(F.explode(words).alias("word"))
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("c1"))
-            .persist()
-        )
-        _PMI_UNI_CACHE[key] = uni
-    return uni
+    """Corpus unigram counts, PERSISTED (vocab-scale, staged like the
+    shingle index): built once, so q73's totals and the final PMI job's
+    two word-count joins serve from the cache instead of re-exploding
+    the corpus. Kept as its own explode+agg: deriving unigrams from the
+    bigram table (w1 fold + per-doc last words) was measured SLOWER — no
+    ReusedExchange across the two consumers, so the corpus explode ran
+    twice plus an extra union shuffle."""
+    docs = read_table(spark, sf_dir, "documents")
+    words = F.split(D.normalize_text(F.col("text")), " ")
+    return _persisted(
+        spread(docs, "doc_id")
+        .select(F.explode(words).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("c1"))
+    )
 
 
+@artifact
 def _pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus bigram counts, PERSISTED next to the unigram table: the
     expensive half of the collocation index (one corpus explode +
     hash-agg with map-side combine; shuffle rows are (w1, w2, partial
     count), never documents). q73's serve stage then filters + joins
     vocab-scale tables only."""
-    key = (session_token(spark), sf_dir, "pmi_bi")
-    bi = _PMI_UNI_CACHE.get(key)
-    if bi is None:
-        docs = read_table(spark, sf_dir, "documents")
-        words = F.split(D.normalize_text(F.col("text")), " ")
-        toks = spread(docs, "doc_id").select(words.alias("w"))
-        # arrays_zip, not zip_with: higher-order-function lambdas are
-        # interpreted per element (~2× cost, q57's measurement) while
-        # arrays_zip stays in codegen
-        pairs = toks.select(
-            F.explode(
-                F.arrays_zip(
-                    F.slice(
-                        F.col("w"), 1, F.greatest(F.size("w") - 1, F.lit(0))
-                    ).alias("w1"),
-                    F.slice(
-                        F.col("w"), 2, F.greatest(F.size("w") - 1, F.lit(0))
-                    ).alias("w2"),
-                )
-            ).alias("p")
-        ).select("p.w1", "p.w2")
-        bi = (
-            pairs.groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("c2"))
-            .persist()
-        )
-        _PMI_UNI_CACHE[key] = bi
-    return bi
+    docs = read_table(spark, sf_dir, "documents")
+    words = F.split(D.normalize_text(F.col("text")), " ")
+    toks = spread(docs, "doc_id").select(words.alias("w"))
+    # arrays_zip, not zip_with: higher-order-function lambdas are
+    # interpreted per element (~2× cost, q57's measurement) while
+    # arrays_zip stays in codegen
+    pairs = toks.select(
+        F.explode(
+            F.arrays_zip(
+                F.slice(
+                    F.col("w"), 1, F.greatest(F.size("w") - 1, F.lit(0))
+                ).alias("w1"),
+                F.slice(
+                    F.col("w"), 2, F.greatest(F.size("w") - 1, F.lit(0))
+                ).alias("w2"),
+            )
+        ).alias("p")
+    ).select("p.w1", "p.w2")
+    return _persisted(pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")))
 
 
 
@@ -2600,10 +2373,13 @@ def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
     # column-less parquet count (row-group metadata, no column IO).
     # Both are MEMOIZED next to the staged unigram table: they are
     # per-corpus constants, so the serve path pays zero eager jobs.
-    mkey = (session_token(spark), sf_dir, "pmi_totals")
-    if mkey not in _PMI_UNI_CACHE:
-        _PMI_UNI_CACHE[mkey] = (uni.agg(F.sum("c1")).first()[0], docs.count())
-    total1, n_docs = _PMI_UNI_CACHE[mkey]
+    total1, n_docs = ARTIFACTS.get(
+        spark,
+        sf_dir,
+        "pmi_totals",
+        (),
+        lambda: (uni.agg(F.sum("c1")).first()[0], docs.count()),
+    )
     total2 = total1 - n_docs
     scored = (
         bi.filter(F.col("c2") >= _PMI_MIN)
@@ -2702,10 +2478,6 @@ def q74(spark: SparkSession, sf_dir: str) -> DataFrame:
 # never rescanned and nothing shuffles except per-doc partials.
 _LM_TRAIN_MOD = 4  # doc_id % 4 != 0 -> train slice (75 %)
 
-# Session-keyed staged LM: (uni DataFrame, bi DataFrame, vocab size).
-# Same keying/release discipline as the shingle index.
-_LM_CACHE: dict = {}
-
 
 def _bigram_pairs(col: str = "w"):
     """(w1, w2) adjacent-pair structs from a word-array column — q73's
@@ -2716,44 +2488,30 @@ def _bigram_pairs(col: str = "w"):
     )
 
 
+@artifact
 def _lm_counts(spark: SparkSession, sf_dir: str):
-    key = (session_token(spark), sf_dir, "lm")
-    entry = _LM_CACHE.get(key)
-    if entry is None:
-        docs = read_table(spark, sf_dir, "documents")
-        words = F.split(D.normalize_text(F.col("text")), " ")
-        train = (
-            spread(docs, "doc_id")
-            .filter(F.col("doc_id") % _LM_TRAIN_MOD != 0)
-            .select(words.alias("w"))
-        )
-        uni = (
-            train.select(F.explode("w").alias("w1"))
-            .groupBy("w1")
-            .agg(F.count(F.lit(1)).alias("c1"))
-            .persist()
-        )
-        bi = (
-            train.select(F.explode(_bigram_pairs()).alias("p"))
-            .select("p.w1", "p.w2")
-            .groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("c2"))
-            .persist()
-        )
-        vocab = uni.count()  # materializes uni; |vocab| is LM metadata
-        bi.count()
-        entry = _LM_CACHE[key] = (uni, bi, vocab)
-    return entry
-
-
-def release_lm(sf_dir: str | None = None) -> None:
-    """Drop cached LM count tables (all, or one corpus')."""
-    live = session_token()
-    for key in [k for k in _LM_CACHE if sf_dir is None or k[1] == sf_dir]:
-        uni, bi, _v = _LM_CACHE.pop(key)
-        if key[0] == live:
-            uni.unpersist(blocking=False)
-            bi.unpersist(blocking=False)
+    """Staged LM: (uni DataFrame, bi DataFrame, vocab size)."""
+    docs = read_table(spark, sf_dir, "documents")
+    words = F.split(D.normalize_text(F.col("text")), " ")
+    train = (
+        spread(docs, "doc_id")
+        .filter(F.col("doc_id") % _LM_TRAIN_MOD != 0)
+        .select(words.alias("w"))
+    )
+    uni = (
+        train.select(F.explode("w").alias("w1"))
+        .groupBy("w1")
+        .agg(F.count(F.lit(1)).alias("c1"))
+        .persist()
+    )
+    bi = _persisted(
+        train.select(F.explode(_bigram_pairs()).alias("p"))
+        .select("p.w1", "p.w2")
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("c2"))
+    )
+    vocab = uni.count()  # materializes uni; |vocab| is LM metadata
+    return uni, bi, vocab
 
 
 @register(
@@ -2954,14 +2712,8 @@ _SEM_CELLS = 32
 _SEM_CELL_CAP_FLOOR = 256
 _SEM_CELL_CAP_FACTOR = 8
 
-# Centroid lists are plain Python floats (driver metadata, like the
-# percentile brackets) — cached per corpus, cleared by release_caches().
-_SEM_CENT_CACHE: dict = {}
-# Persisted assignment table (vec_id -> cell + cent_sim + vector/norm):
-# the SemDeDup materialization between clustering and dedup passes.
-_SEM_ASSIGN_CACHE: dict = {}
 
-
+@artifact
 def _sem_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Staged SemDeDup cluster-assignment table (vec_id, e, nrm, cell,
     cent_sim), PERSISTED per corpus — the materialization between the
@@ -2970,16 +2722,8 @@ def _sem_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     join) would each re-run the scan + assignment pipeline."""
     import math
 
-    key = (session_token(spark), sf_dir, _SEM_CELLS, _IVF_SEED)
-    a = _SEM_ASSIGN_CACHE.get(key)
-    if a is not None:
-        return a
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = _SEM_CENT_CACHE.get(key)
-    if cents is None:
-        cents = _SEM_CENT_CACHE[key] = S.ivf_centroids(
-            emb, k_cells=_SEM_CELLS, seed=_IVF_SEED
-        )
+    cents = _centroids(spark, sf_dir, _SEM_CELLS)
     # assignment via a BROADCAST centroid table, not centroid-literal
     # expressions: at 32 cells x 64 dims the inlined literals blow the
     # whole-stage-codegen method-size limit and the whole stage falls
@@ -3059,17 +2803,7 @@ def _sem_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"(_SEM_CELLS={_SEM_CELLS}) or inspect the embedding column "
             f"for low variance."
         )
-    _SEM_ASSIGN_CACHE[key] = a
     return a
-
-
-def release_sem_assignment(sf_dir: str | None = None) -> None:
-    """Drop cached SemDeDup assignment frames (all, or one corpus')."""
-    live = session_token()
-    for key in [k for k in _SEM_ASSIGN_CACHE if sf_dir is None or k[1] == sf_dir]:
-        df = _SEM_ASSIGN_CACHE.pop(key)
-        if key[0] == live:
-            df.unpersist(blocking=False)
 
 
 
@@ -3166,30 +2900,17 @@ def q77(spark: SparkSession, sf_dir: str) -> DataFrame:
 # drop/trim decisions in the public sequence-dedup recipes). The staged
 # span table is that materialization (localCheckpoint at test scale,
 # a storage write at 100 TB).
-_SPAN_CACHE: dict = {}
-
-
+@artifact
 def _staged_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_token(spark), sf_dir)
-    sp = _SPAN_CACHE.get(key)
-    if sp is None:
-        docs = read_table(spark, sf_dir, "documents")
-        sp = D.duplicate_spans(
-            docs,
-            "doc_id",
-            "text",
-            anchor_len=_SPAN_K,
-            min_span=_SPAN_MIN,
-            max_postings=_SPAN_MAXPOST,
-        ).localCheckpoint(eager=True)
-        _SPAN_CACHE[key] = sp
-    return sp
-
-
-def release_spans(sf_dir: str | None = None) -> None:
-    """Drop cached duplicated-span frames (all, or one corpus')."""
-    for key in [k for k in _SPAN_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _SPAN_CACHE.pop(key)
+    docs = read_table(spark, sf_dir, "documents")
+    return D.duplicate_spans(
+        docs,
+        "doc_id",
+        "text",
+        anchor_len=_SPAN_K,
+        min_span=_SPAN_MIN,
+        max_postings=_SPAN_MAXPOST,
+    ).localCheckpoint(eager=True)
 
 
 @register(
@@ -3361,6 +3082,7 @@ _WIN_K, _WIN_W, _WIN_MAXPOST, _WIN_MIN_SHARED = 4, 4, 8, 2
 _WIN_POS = 1 << 20
 
 
+@artifact
 def _staged_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STAGED winnowing fingerprint table (doc_id, h) — the MOSS-style
     per-document fingerprint index a plagiarism/dedup system
@@ -3369,10 +3091,6 @@ def _staged_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     build; the q79 serve stage is the bucket-join half only."""
     from pyspark.sql import Window
 
-    key = (session_token(spark), sf_dir)
-    fp = _FP_CACHE.get(key)
-    if fp is not None:
-        return fp
     docs = read_table(spark, sf_dir, "documents")
     # with_total carries n_grams as a per-doc melt-time constant — one
     # less window pass than a COUNT() OVER (PARTITION BY doc_id). The
@@ -3396,7 +3114,7 @@ def _staged_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("h") * _WIN_POS + (F.lit(_WIN_POS) - F.col("pos"))).alias("ord"),
         "n_grams",
     )
-    fp = (
+    return (
         ordv.withColumn("sel", F.min("ord").over(w_frame))
         .filter(F.col("pos") <= F.col("n_grams") - _WIN_W + 1)
         .select(
@@ -3407,38 +3125,22 @@ def _staged_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    _FP_CACHE[key] = fp
-    return fp
 
 
-_FP_CACHE: dict = {}
-
-
-def release_fingerprints(sf_dir: str | None = None) -> None:
-    """Drop cached fingerprint tables (all, or one corpus')."""
-    for key in [k for k in _FP_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _FP_CACHE.pop(key)
-
-
-
+@artifact
 def _staged_fp_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STAGED capped fingerprint posting lists (h, L): the PRUNED
     inverted index over ``_staged_fingerprints`` — singleton and
     boilerplate fingerprints dropped at index-build time (the
     ``_shingle_rare`` discipline), so the q79 serve stage is one
     row-local pair expansion + one pair count."""
-    key = (session_token(spark), sf_dir, "post")
-    g = _FP_CACHE.get(key)
-    if g is None:
-        g = (
-            _staged_fingerprints(spark, sf_dir)
-            .groupBy("h")
-            .agg(F.collect_set("doc_id").alias("L"))
-            .filter((F.size("L") >= 2) & (F.size("L") <= _WIN_MAXPOST))
-            .localCheckpoint(eager=True)
-        )
-        _FP_CACHE[key] = g
-    return g
+    return (
+        _staged_fingerprints(spark, sf_dir)
+        .groupBy("h")
+        .agg(F.collect_set("doc_id").alias("L"))
+        .filter((F.size("L") >= 2) & (F.size("L") <= _WIN_MAXPOST))
+        .localCheckpoint(eager=True)
+    )
 
 
 
@@ -3968,30 +3670,15 @@ _SENT_MIN_LEN = 20
 # pattern): one corpus melt builds it; both serve stages then pay one
 # digest-keyed join instead of re-deriving the aggregate inside their
 # own plans. ~24-byte rows (16-byte digest + count) at any corpus scale.
-_SENT_DF_CACHE: dict = {}
-
-
+@artifact
 def _sent_digest_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_token(spark), sf_dir)
-    t = _SENT_DF_CACHE.get(key)
-    if t is None:
-        docs = spread(read_table(spark, sf_dir, "documents"), "doc_id")
-        melt = D.sentence_digest_melt(
-            docs, "doc_id", "text", min_len=_SENT_MIN_LEN
-        )
-        t = (
-            melt.groupBy("sd")
-            .agg(F.count(F.lit(1)).alias("n_docs_with"))
-            .localCheckpoint(eager=True)
-        )
-        _SENT_DF_CACHE[key] = t
-    return t
-
-
-def release_sent_df(sf_dir: str | None = None) -> None:
-    """Drop cached sentence-digest doc-frequency tables."""
-    for key in [k for k in _SENT_DF_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _SENT_DF_CACHE.pop(key)
+    docs = spread(read_table(spark, sf_dir, "documents"), "doc_id")
+    melt = D.sentence_digest_melt(docs, "doc_id", "text", min_len=_SENT_MIN_LEN)
+    return (
+        melt.groupBy("sd")
+        .agg(F.count(F.lit(1)).alias("n_docs_with"))
+        .localCheckpoint(eager=True)
+    )
 
 
 @register(
@@ -4769,32 +4456,19 @@ def q97(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a STAGED artifact (1024 rows — broadcast-sized at any corpus scale,
 # refit only when the target changes); scoring is one raw-pool pass.
 _DSIR_MOD = 7
-_DSIR_CACHE: dict = {}
 
 
+@artifact
 def _dsir_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged bucket -> log_ratio table (persisted, session-keyed)."""
-    key = (session_token(spark), sf_dir)
-    entry = _DSIR_CACHE.get(key)
-    if entry is None:
-        docs = read_table(spark, sf_dir, "documents")
-        lr = T.dsir_log_ratio_table(
+    """Staged bucket -> log_ratio table (persisted)."""
+    docs = read_table(spark, sf_dir, "documents")
+    return _persisted(
+        T.dsir_log_ratio_table(
             spread(docs, "doc_id"),
             "text",
             F.col("doc_id") % _DSIR_MOD == 0,
-        ).persist()
-        lr.count()
-        entry = _DSIR_CACHE[key] = lr
-    return entry
-
-
-def release_dsir(sf_dir: str | None = None) -> None:
-    """Drop cached DSIR ratio tables (all, or one corpus')."""
-    live = session_token()
-    for key in [k for k in _DSIR_CACHE if sf_dir is None or k[1] == sf_dir]:
-        lr = _DSIR_CACHE.pop(key)
-        if key[0] == live:
-            lr.unpersist(blocking=False)
+        )
+    )
 
 
 def _q98_oracle() -> str:
@@ -4879,29 +4553,14 @@ def q98(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Staged (source, word) split-count table — ONE corpus melt serving both
 # distribution reports (q99 drift, q100 salient terms): the
 # compose-don't-recompute discipline (q88/q73, q93/q50).
-_SWC_CACHE: dict = {}
-
-
+@artifact
 def _swc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_token(spark), sf_dir)
-    entry = _SWC_CACHE.get(key)
-    if entry is None:
-        docs = read_table(spark, sf_dir, "documents")
-        c = T.split_word_counts(
+    docs = read_table(spark, sf_dir, "documents")
+    return _persisted(
+        T.split_word_counts(
             spread(docs, "doc_id"), "source", "text", F.col("doc_id") % 2 == 0
-        ).persist()
-        c.count()
-        entry = _SWC_CACHE[key] = c
-    return entry
-
-
-def release_swc(sf_dir: str | None = None) -> None:
-    """Drop cached source-word count tables (all, or one corpus')."""
-    live = session_token()
-    for key in [k for k in _SWC_CACHE if sf_dir is None or k[1] == sf_dir]:
-        c = _SWC_CACHE.pop(key)
-        if key[0] == live:
-            c.unpersist(blocking=False)
+        )
+    )
 
 
 @register(
@@ -5040,48 +4699,31 @@ _SEMREG_PLANES, _SEMREG_BANDS = 15, 3
 # the 15-plane signature subtree three times (registry side, batch side,
 # and the probe's id spine) inside one plan — the same artifact
 # discipline as q82's staged shingle index.
-_SRP_BAND_CACHE: dict = {}
-
-
+@artifact
 def _srp_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_token(spark), sf_dir, _SEMREG_PLANES, _SEMREG_BANDS)
-    t = _SRP_BAND_CACHE.get(key)
-    if t is None:
-        emb = read_table(spark, sf_dir, "embeddings")
-        t = S.srp_band_buckets(
-            spread(emb, "vec_id"),
-            "vec_id",
-            "embedding",
-            n_planes=_SEMREG_PLANES,
-            bands=_SEMREG_BANDS,
-        ).localCheckpoint(eager=True)
-        _SRP_BAND_CACHE[key] = t
-    return t
+    emb = read_table(spark, sf_dir, "embeddings")
+    return S.srp_band_buckets(
+        spread(emb, "vec_id"),
+        "vec_id",
+        "embedding",
+        n_planes=_SEMREG_PLANES,
+        bands=_SEMREG_BANDS,
+    ).localCheckpoint(eager=True)
 
 
+@artifact
 def _srp_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPACTED history registry: distinct (band_id, band_hash)
     keys of the non-batch slice, materialized — what registry-compact
     maintains on disk in the example pipelines, so the serve probe
     skips the defensive per-probe dedup stage."""
-    key = (session_token(spark), sf_dir, _SEMREG_PLANES, _SEMREG_BANDS, "reg")
-    t = _SRP_BAND_CACHE.get(key)
-    if t is None:
-        t = (
-            _srp_bands(spark, sf_dir)
-            .filter(F.col("vec_id") % 3 != 0)
-            .select("band_id", "band_hash")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        _SRP_BAND_CACHE[key] = t
-    return t
-
-
-def release_srp_bands(sf_dir: str | None = None) -> None:
-    """Drop cached SRP band tables (all, or one corpus')."""
-    for key in [k for k in _SRP_BAND_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _SRP_BAND_CACHE.pop(key)
+    return (
+        _srp_bands(spark, sf_dir)
+        .filter(F.col("vec_id") % 3 != 0)
+        .select("band_id", "band_hash")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
 
 def _q101_oracle() -> str:
@@ -5154,34 +4796,20 @@ def q101(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the iterative trainer loop (like the IVF centroids build) and unrolled
 # into nested StringReplace literals, so encoding is a single
 # whole-stage-codegen projection — no explode, no shuffle, no Python.
-_BPE_MERGES_CACHE: dict = {}
-
-
+@artifact
 def _bpe_merge_table(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, str, int]]:
     """Staged iterative merge table (merge_rank, s1, s2, pair_count):
     q95's trainer-loop output, cached per corpus (30 tuples —
     vocabulary metadata, not data)."""
-    key = (session_token(spark), sf_dir, _BPE_TOP)
-    table = _BPE_MERGES_CACHE.get(key)
-    if table is None:
-        docs = read_table(spark, sf_dir, "documents")
-        table = _BPE_MERGES_CACHE[key] = T.bpe_learn_merges(
-            docs, "doc_id", "text", n_merges=_BPE_TOP
-        )
-    return table
+    docs = read_table(spark, sf_dir, "documents")
+    return T.bpe_learn_merges(docs, "doc_id", "text", n_merges=_BPE_TOP)
 
 
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
     """The staged merge table as apply-ready (s1, s2) pairs in rank order."""
     return [(s1, s2) for _, s1, s2, _ in _bpe_merge_table(spark, sf_dir)]
-
-
-def release_bpe(sf_dir: str | None = None) -> None:
-    """Drop cached BPE merge tables (all, or one corpus')."""
-    for key in [k for k in _BPE_MERGES_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _BPE_MERGES_CACHE.pop(key)
 
 
 def _q102_oracle() -> str:

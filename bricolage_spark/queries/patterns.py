@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from bricolage_spark.catalog import read_table
 from bricolage_spark.queries import register
+from bricolage_spark.session import artifact
 
 
 # --------------------------------------------------------------------------
@@ -304,11 +305,20 @@ def q46(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return read_table(spark, sf_dir, "orders").withColumnRenamed(
+        "o_custkey", "c_custkey"
+    )
+
+
 # Hot-key statistics memo: the sampled probe is the statistics-free stand-
 # in for ANALYZE table stats, and like real stats it is computed once per
-# (session, table), not once per query run. Plain values (a list), but
-# session-keyed anyway so a restart re-probes fresh data.
-_HOT_KEY_CACHE: dict = {}
+# (session, table), not once per query run.
+@artifact
+def _orders_hot_keys(spark: SparkSession, sf_dir: str) -> list:
+    from bricolage_spark.operators.skew import detect_hot_keys
+
+    return detect_hot_keys(_orders(spark, sf_dir), "c_custkey")
 
 
 @register(
@@ -331,18 +341,15 @@ _HOT_KEY_CACHE: dict = {}
     "machinery is exercised by the skewed-fixture pytest cases.",
 )
 def q47(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bricolage_spark.operators.skew import detect_hot_keys, salted_join
-    from bricolage_spark.session import session_token
+    from bricolage_spark.operators.skew import salted_join
 
-    o = read_table(spark, sf_dir, "orders").withColumnRenamed(
-        "o_custkey", "c_custkey"
-    )
     c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    ck = (session_token(spark), sf_dir, "orders", "c_custkey")
-    if ck not in _HOT_KEY_CACHE:
-        _HOT_KEY_CACHE[ck] = detect_hot_keys(o, "c_custkey")
     joined = salted_join(
-        o, c, key="c_custkey", salt_from="o_orderkey", hot=_HOT_KEY_CACHE[ck]
+        _orders(spark, sf_dir),
+        c,
+        key="c_custkey",
+        salt_from="o_orderkey",
+        hot=_orders_hot_keys(spark, sf_dir),
     )
     return joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_orders"),

@@ -15,7 +15,9 @@ The defaults are chosen for correctness-at-scale first:
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -126,10 +128,10 @@ def get_spark(
 
 def session_token(spark: SparkSession | None = None) -> str:
     """A key component that changes whenever the underlying JVM session
-    does. Module-level caches that hold live handles (persisted
-    DataFrames, parsed Columns) include this in their keys so a stopped/
-    restarted session can never be handed a dead Py4J reference — the new
-    session simply misses and rebuilds.
+    does. :class:`ArtifactCache` keys include it, so a stopped/restarted
+    session can never be handed a dead Py4J reference (persisted
+    DataFrame, parsed Column) — the new session simply misses and
+    rebuilds.
     """
     if spark is None:
         spark = SparkSession.getActiveSession()
@@ -137,6 +139,100 @@ def session_token(spark: SparkSession | None = None) -> str:
         return "<no-session>"
     sc = spark.sparkContext
     return f"{sc.applicationId}/{sc.startTime}"
+
+
+_MISSING = object()
+
+
+class ArtifactCache:
+    """Build-once memo of session-scoped intermediates: staged artifacts,
+    table handles, parsed expressions.
+
+    An entry is keyed by (session token, absolute data dir, name, params).
+    Each key has its own build lock, so concurrent callers build an entry
+    once and the others wait for it; a build that calls ``get`` for
+    another key therefore waits until that dependency is built. A value is
+    stored only when its build returns, so a raising build leaves no entry
+    and the next caller builds again.
+    """
+
+    def __init__(self) -> None:
+        self._values: dict[tuple, object] = {}
+        self._locks: dict[tuple, threading.Lock] = {}
+        self._guard = threading.Lock()
+
+    def get(self, spark, sf_dir, name: str, params: tuple, build):
+        key = (
+            session_token(spark),
+            None if sf_dir is None else os.path.abspath(sf_dir),
+            name,
+            params,
+        )
+        value = self._values.get(key, _MISSING)
+        if value is not _MISSING:
+            return value
+        with self._guard:
+            lock = self._locks.setdefault(key, threading.Lock())
+        with lock:
+            value = self._values.get(key, _MISSING)
+            if value is _MISSING:
+                value = self._values[key] = build()
+            return value
+
+    def release(self, sf_dir: str | None = None) -> None:
+        """Drop every entry (all, or one data dir's).
+
+        Persisted DataFrames of the live session, also inside tuples, are
+        unpersisted. An entry keyed by a stopped session's token is only
+        dropped: its storage died with that session, and ``unpersist`` on
+        the dead Py4J handle raises from the driver endpoint.
+        """
+        path = None if sf_dir is None else os.path.abspath(sf_dir)
+        with self._guard:
+            keys = [k for k in self._values if path is None or k[1] == path]
+            dropped = [(k[0], self._values.pop(k)) for k in keys]
+            for k in keys:
+                self._locks.pop(k, None)
+        live = session_token()
+        for token, value in dropped:
+            if token != live:
+                continue
+            for handle in value if isinstance(value, tuple) else (value,):
+                # `is True`: a Column answers any attribute with a Column
+                if getattr(handle, "is_cached", False) is True:
+                    handle.unpersist(blocking=False)
+        # localCheckpoint-backed artifacts free their executor blocks only
+        # after the JVM notices the checkpoint RDD is unreachable (py4j ref
+        # dropped -> JVM GC -> ContextCleaner). A long-lived driver with a
+        # quiet old-gen can sit on gigabytes of dead blocks for a long time
+        # (the r12 64x octave exhausted the unified pool exactly that way),
+        # so nudge the chain; ContextCleaner does the actual free.
+        spark = SparkSession.getActiveSession()
+        if spark is not None:
+            try:
+                spark._jvm.System.gc()
+            except Exception:
+                pass  # no JVM (stopped session) — nothing to free
+
+
+#: The process's one artifact cache.
+ARTIFACTS = ArtifactCache()
+
+
+def artifact(build):
+    """Memoise ``build(spark, sf_dir, *params)`` in :data:`ARTIFACTS`,
+    keyed by the function's qualified name and ``params``. A build that
+    persists a DataFrame must also materialise it before returning, so a
+    caller that waited on the build lock never races its first job."""
+    name = f"{build.__module__}.{build.__qualname__}"
+
+    @functools.wraps(build)
+    def get(spark, sf_dir, *params):
+        return ARTIFACTS.get(
+            spark, sf_dir, name, params, lambda: build(spark, sf_dir, *params)
+        )
+
+    return get
 
 
 def stop_spark() -> None:

@@ -569,6 +569,25 @@ def test_ivf_centroids_deterministic_and_assignment_local(spark):
     assert cells <= {0, 1, 2, 3}
 
 
+def test_ivf_centroids_gate_sides_agree_on_duplicate_ids(spark, monkeypatch):
+    """The literal and the broadcast Lloyd labelling (the two sides of
+    the k_cells*dims size gate) both label every ROW, so a corpus with
+    duplicate ids trains the same centroids on either side."""
+    import random
+
+    rnd = random.Random(11)
+    rows = [
+        (i, [rnd.uniform(-1, 1) for _ in range(8)], 0) for i in range(64)
+    ]
+    rows += [r for r in rows if r[0] % 3 == 0]  # repeated rows, same id
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    )
+    literal = S.ivf_centroids(df, k_cells=4, seed=99)  # 4 x 8 literals
+    monkeypatch.setattr(S, "_LITERAL_CENTROID_LIMIT", 0)
+    assert S.ivf_centroids(df, k_cells=4, seed=99) == literal
+
+
 def test_ivf_topk_matches_brute_force_within_probed_cells(spark):
     import random
 

@@ -1,12 +1,12 @@
 """Time the staged-artifact build alone under the current session conf.
-Usage: SPARK_GRAFT_SCHEDULER=... SPARK_GRAFT_CPUS=... python /tmp/art_ab.py
+Usage: SPARK_GRAFT_SCHEDULER=... SPARK_GRAFT_CPUS=... python tools/artifact_ab.py
 Prints one line: scheduler, cores, build seconds.
 """
 import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bricolage_spark.queries import llm_ops, load_all
 from bricolage_spark.session import get_spark
