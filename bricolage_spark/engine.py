@@ -11,7 +11,13 @@ Maps the reference's PSQLTask verb set (lib/bricolage/psqldatasource.rb
   atomic directory rename into place — readers never see partial data,
   a crash leaves the old table intact;
 - ``truncate`` / ``drop`` / ``rename_table`` / ``analyze`` / ``vacuum``
-  (compaction) keep their reference semantics.
+  (compaction) keep their reference semantics;
+- a **schema memo** keeps table metadata off the per-read path: the
+  engine remembers the schema of each flat table dir it wrote, and reads
+  it with ``spark.read.schema(known)`` instead of a parquet schema
+  inference job (one per read). An entry is valid only while the dir's
+  ``(st_ino, st_mtime_ns)`` is the one recorded after the engine's own
+  write, so anything written behind the engine's back is re-inferred.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bricolage_spark.exception import JobFailure, ParameterError
 
@@ -65,6 +72,38 @@ def split_statements(sql_text: str) -> list[str]:
     if s:
         out.append(s)
     return out
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty frame of ``schema``, NOT NULL fields included, built in
+    the JVM: an empty array literal inlined over a one-row range.
+    ``createDataFrame([], schema)`` goes through a Python worker, which
+    costs a few hundred ms per write."""
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.array().cast(T.ArrayType(schema, False)))
+    )
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every field, element and value nullable — the schema a
+    parquet read reports for files written with ``t``."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _dir_token(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return st.st_ino, st.st_mtime_ns
 
 
 class TableSpec:
@@ -109,6 +148,12 @@ class SparkEngine:
         # executed (observed during the write itself) — how job classes
         # report inserted-row counts without a post-write table scan
         self.last_insert_rows: int | None = None
+        # schema memo: table dir -> (dir token after our last write, the
+        # schema of every file in it); see the module docstring. Jobs of
+        # a parallel jobnet share it without a lock: a token is taken
+        # after the write it describes and any later write changes it,
+        # so a lost update only costs one re-inference
+        self._schemas: dict[str, tuple[tuple[int, int], T.StructType]] = {}
         os.makedirs(warehouse, exist_ok=True)
 
     # -- paths / catalog ----------------------------------------------------
@@ -120,10 +165,67 @@ class SparkEngine:
     def table_exists(self, spec: TableSpec | str) -> bool:
         return os.path.isdir(self.table_dir(spec))
 
+    # -- schema memo ---------------------------------------------------------
+
+    def _known_schema(self, tdir: str) -> T.StructType | None:
+        """The memoised schema of ``tdir`` while its token still matches;
+        a stale entry is dropped."""
+        entry = self._schemas.get(tdir)
+        if entry is None:
+            return None
+        if entry[0] != _dir_token(tdir):
+            self._schemas.pop(tdir, None)
+            return None
+        return entry[1]
+
+    def _remember(self, tdir: str, schema: T.StructType | None) -> None:
+        token = _dir_token(tdir)
+        if schema is None or token is None:
+            self._schemas.pop(tdir, None)
+        else:
+            self._schemas[tdir] = (token, schema)
+
+    def _appended(
+        self, tdir: str, before: T.StructType | None, schema: T.StructType | None
+    ) -> None:
+        """After files of ``schema`` were appended to ``tdir`` whose
+        memoised schema was ``before``: keep the entry (new token) when
+        the two agree up to nullability, which parquet reads drop anyway;
+        otherwise forget it."""
+        same = (
+            before is not None and schema is not None and _nullable(before) == _nullable(schema)
+        )
+        self._remember(tdir, before if same else None)
+
+    def _read(self, spec: TableSpec | str) -> DataFrame:
+        tdir = self.table_dir(spec)
+        known = self._known_schema(tdir)
+        reader = self.spark.read if known is None else self.spark.read.schema(known)
+        return reader.parquet(tdir)
+
+    def append_parts(
+        self, src: str, spec: TableSpec | str, schema: T.StructType | None = None
+    ) -> None:
+        """Append the part-files of the staged parquet dir ``src`` to table
+        ``spec`` by rename, then register it. Idempotent: a ``src`` that is
+        gone moves nothing. ``schema`` is the staged frame's schema when
+        the caller knows it; without it the next read infers."""
+        dest = self.table_dir(spec)
+        before = self._known_schema(dest) if os.path.isdir(dest) else schema
+        if os.path.isdir(src):
+            os.makedirs(dest, exist_ok=True)
+            for f in os.listdir(src):
+                if f.startswith(("_", ".")):
+                    continue  # _SUCCESS / .crc markers stay behind
+                os.rename(os.path.join(src, f), os.path.join(dest, f))
+            shutil.rmtree(src, ignore_errors=True)
+        if os.path.isdir(dest):
+            self._appended(dest, before, schema)
+            self.register(spec)
+
     def register(self, spec: TableSpec | str) -> None:
         spec = TableSpec.parse(spec) if isinstance(spec, str) else spec
-        df = self.spark.read.parquet(self.table_dir(spec))
-        df.createOrReplaceTempView(spec.view_name)
+        self._read(spec).createOrReplaceTempView(spec.view_name)
 
     def register_all(self) -> list[str]:
         names = []
@@ -147,7 +249,7 @@ class SparkEngine:
     def table(self, spec: TableSpec | str) -> DataFrame:
         if not self.table_exists(spec):
             raise JobFailure(f"table not found: {spec}")
-        return self.spark.read.parquet(self.table_dir(spec))
+        return self._read(spec)
 
     # -- SQL ---------------------------------------------------------------
 
@@ -213,6 +315,8 @@ class SparkEngine:
         writer = df.write
         if partition_by:
             writer = writer.partitionBy(*partition_by)
+        # a partitioned dir is not flat: never memoised
+        schema = None if partition_by else df.schema
         if mode == "overwrite":
             stage = f"{final}.__stage__{uuid.uuid4().hex[:8]}"
             writer.mode("overwrite").parquet(stage)
@@ -221,8 +325,11 @@ class SparkEngine:
                 os.rename(final, old)
             os.rename(stage, final)
             shutil.rmtree(old, ignore_errors=True)
+            self._remember(final, schema)
         elif mode == "append":
+            before = self._known_schema(final) if os.path.isdir(final) else schema
             writer.mode("append").parquet(final)
+            self._appended(final, before, schema)
         else:
             raise ParameterError(f"unknown write mode: {mode}")
         self.register(spec)
@@ -236,6 +343,7 @@ class SparkEngine:
             if force:
                 return
             raise JobFailure(f"cannot drop, no such table: {spec}")
+        self._schemas.pop(self.table_dir(spec), None)
         shutil.rmtree(self.table_dir(spec))
         self.spark.catalog.dropTempView(spec.view_name)
 
@@ -251,8 +359,12 @@ class SparkEngine:
             raise JobFailure(f"cannot rename, no such table: {src}")
         if self.table_exists(dest):
             raise JobFailure(f"cannot rename, table exists: {dest}")
-        os.makedirs(os.path.dirname(self.table_dir(dest)), exist_ok=True)
-        os.rename(self.table_dir(src), self.table_dir(dest))
+        src_dir, dest_dir = self.table_dir(src), self.table_dir(dest)
+        known = self._known_schema(src_dir)
+        self._schemas.pop(src_dir, None)
+        os.makedirs(os.path.dirname(dest_dir), exist_ok=True)
+        os.rename(src_dir, dest_dir)
+        self._remember(dest_dir, known)
         try:
             self.spark.catalog.dropTempView(src.view_name)
         except Exception:
@@ -611,10 +723,8 @@ class SparkEngine:
         (psqldatasource.rb:298-302) so a later rename pair never fails."""
         spec = TableSpec.parse(spec) if isinstance(spec, str) else spec
         if not self.table_exists(spec):
-            from pyspark.sql import types as T
-
-            empty = self.spark.createDataFrame(
-                [], T.StructType([T.StructField("x", T.IntegerType())])
+            empty = empty_frame(
+                self.spark, T.StructType([T.StructField("x", T.IntegerType())])
             )
             self.save_table(empty, spec, mode="overwrite")
 

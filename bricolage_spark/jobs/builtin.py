@@ -15,7 +15,7 @@ import time
 from pyspark.sql import functions as F
 
 from bricolage_spark.ddl import parse_ct
-from bricolage_spark.engine import TableSpec
+from bricolage_spark.engine import TableSpec, empty_frame
 from bricolage_spark.exception import JobFailure, ParameterError
 from bricolage_spark.jobs import Job, JobResult, expand_glob, jobclass
 from bricolage_spark.parameters import (
@@ -119,7 +119,7 @@ def create(job: Job) -> JobResult:
         tdef = parse_ct(job.variables.expand(f.read()))
     if job.bool_param("drop", True):
         job.engine.drop_table(dest, force=True)
-    empty = job.engine.spark.createDataFrame([], tdef.schema)
+    empty = empty_frame(job.engine.spark, tdef.schema)
     job.engine.save_table(empty, dest, mode="overwrite", sort_by=tdef.sortkeys or None)
     _post_ops(job, dest)
     return JobResult(message=f"created {dest}")

@@ -7,7 +7,11 @@ Semantics reproduced from jobclass/streaming_load.rb (531 LoC — SURVEY.md
    strftime-like ``file-name`` pattern (``%Y%m%d-%H%M_%Q`` → named-group
    regex, compile_name_pattern :455-473);
 2. dedup against the **load log** table by ``data_file``
-   (right-outer/NOT-IN joins :294-330) — exactly-once across crash/retry;
+   (right-outer/NOT-IN joins :294-330) — exactly-once across crash/retry.
+   The lookup is one filtered scan of the log, ``data_file IN
+   (<candidate names>)``, pushed down to the parquet reader: its result
+   is bounded by the queue listing, not by the log's history, and the
+   engine's schema memo serves the log's schema without an inference job;
 3. load new files into the work table, ``INSERT INTO dest SELECT * FROM
    work`` (or a custom SQL), and append the load log — atomically (the
    reference uses one Redshift transaction :166-195; we stage both the
@@ -189,30 +193,20 @@ class StreamingLoader:
         self.sql = sql
         self.process_id = process_id
 
-    def loaded_files(self) -> set[str]:
-        if not self.engine.table_exists(self.log_table):
-            return set()
-        return {
-            r.data_file
-            for r in self.engine.table(self.log_table).select("data_file").collect()
-        }
-        # NOTE: at 100 TB the log has millions of rows — production path
-        # below (new_files) uses an anti-join, never this collect; this
-        # helper exists for tests/inspection only.
-
     def new_files(self, candidates: list[str]) -> list[str]:
-        """Anti-join candidates against the load log (exactly-once core,
-        streaming_load.rb:294-312). Distributed: both sides are frames."""
-        if not candidates:
-            return []
-        spark = self.engine.spark
-        cand = spark.createDataFrame(
-            [(os.path.basename(p), p) for p in candidates], "data_file string, path string"
-        )
-        if self.engine.table_exists(self.log_table):
-            log = self.engine.table(self.log_table).select("data_file")
-            cand = cand.join(log, "data_file", "left_anti")
-        return [r.path for r in cand.select("path").collect()]
+        """The candidates the load log does not hold, in candidate order
+        (exactly-once core, streaming_load.rb:294-312). One collect of
+        the log rows whose ``data_file`` is a candidate name: at most one
+        row per queued file, whatever the size of the log."""
+        if not candidates or not self.engine.table_exists(self.log_table):
+            return list(candidates)
+        names = [os.path.basename(p) for p in candidates]
+        log = self.engine.table(self.log_table)
+        logged = {
+            r.data_file
+            for r in log.where(F.col("data_file").isin(names)).select("data_file").collect()
+        }
+        return [p for p, n in zip(candidates, names) if n not in logged]
 
     # -- joint dest+log commit (streaming_load.rb:166-195 parity) -----------
     #
@@ -231,7 +225,7 @@ class StreamingLoader:
     # recover(); the batch reloads — nothing was published). A crash
     # after (2) is rolled FORWARD by recover() on the next invocation:
     # both appends complete together, so dest and log can never disagree
-    # and the anti-join stays exactly-once.
+    # and the log lookup stays exactly-once.
 
     @property
     def _tx_dir(self) -> str:
@@ -247,17 +241,11 @@ class StreamingLoader:
         return stage, int(obs.get["rows_written"])
 
     def _apply_moves(self, moves: list[dict]) -> None:
+        # a move carries its frame's schema only in the batch that staged
+        # it; a manifest read back by recover() has none, so the engine
+        # re-infers those tables
         for mv in moves:
-            src, dest = mv["src"], mv["dest"]
-            if os.path.isdir(src):
-                os.makedirs(dest, exist_ok=True)
-                for f in os.listdir(src):
-                    if f.startswith(("_", ".")):
-                        continue  # _SUCCESS / .crc markers stay behind
-                    os.rename(os.path.join(src, f), os.path.join(dest, f))
-                shutil.rmtree(src, ignore_errors=True)
-            if os.path.isdir(dest):
-                self.engine.register(mv["table"])
+            self.engine.append_parts(mv["src"], mv["table"], mv.get("schema"))
 
     def recover(self) -> int:
         """Roll forward any committed-but-unapplied manifests, then drop
@@ -363,10 +351,12 @@ class StreamingLoader:
         txid = uuid.uuid4().hex[:12]
         dest_stage, rows = self._stage_delta(insert_df, self.dest_table, txid)
         now = F.current_timestamp()
+        # one string literal split in the JVM, not createDataFrame (a
+        # Python worker); a basename never holds the "/" it is split on
+        names = F.lit("/".join(os.path.basename(p) for p in new))
         log_rows = (
-            spark.createDataFrame(
-                [(os.path.basename(p),) for p in new], "data_file string"
-            )
+            spark.range(0, 1, 1, 1)
+            .select(F.explode(F.split(names, "/")).alias("data_file"))
             .select(
                 F.lit(self.process_id).alias("job_process_id"),
                 now.alias("start_time"),
@@ -377,22 +367,18 @@ class StreamingLoader:
         )
         log_stage, _ = self._stage_delta(log_rows, self.log_table, txid)
 
-        manifest = {
-            "txid": txid,
-            "moves": [
-                {"src": dest_stage, "dest": self.engine.table_dir(self.dest_table),
-                 "table": self.dest_table},
-                {"src": log_stage, "dest": self.engine.table_dir(self.log_table),
-                 "table": self.log_table},
-            ],
-        }
+        moves = [
+            {"src": dest_stage, "table": self.dest_table},
+            {"src": log_stage, "table": self.log_table},
+        ]
         os.makedirs(self._tx_dir, exist_ok=True)
         mpath = os.path.join(self._tx_dir, f"{txid}.json")
         tmp = mpath + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(manifest, f)
+            json.dump({"txid": txid, "moves": moves}, f)
         os.rename(tmp, mpath)  # ← the commit point
-        self._apply_moves(manifest["moves"])
+        moves[0]["schema"], moves[1]["schema"] = insert_df.schema, log_rows.schema
+        self._apply_moves(moves)
         os.remove(mpath)
 
         moved = 0
@@ -433,14 +419,12 @@ def streaming_load(job: Job) -> JobResult:
         files = queue.queued_files()
         return JobResult(message=f"noop: {len(files)} queued file(s)")
     if job.bool_param("dequeue-only"):
-        moved = 0
-        # one scan of the load log, not one per queued file
-        loaded = loader.loaded_files()
-        for p in queue.queued_files():
-            if os.path.basename(p) in loaded:
-                queue.dequeue(p)
-                moved += 1
-        return JobResult(message=f"dequeued {moved} file(s)")
+        queued = queue.queued_files()
+        pending = set(loader.new_files(queued))
+        done = [p for p in queued if p not in pending]
+        for p in done:
+            queue.dequeue(p)
+        return JobResult(message=f"dequeued {len(done)} file(s)")
     stats = loader.run_once(load_only=job.bool_param("load-only"))
     return JobResult(
         message=(

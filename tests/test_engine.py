@@ -8,8 +8,9 @@ import os
 import pytest
 
 from bricolage_spark.ddl import parse_ct
-from bricolage_spark.engine import TableSpec, split_statements
+from bricolage_spark.engine import TableSpec, empty_frame, split_statements
 from bricolage_spark.exception import JobFailure
+from conftest import spark_jobs
 
 
 def df_of(spark, rows, schema):
@@ -501,3 +502,117 @@ def test_bucketed_sort_spec_drift_fails_fast(engine, spark):
         )
     finally:
         spark.sql("DROP TABLE IF EXISTS bk_sort")
+
+
+# -- schema memo ------------------------------------------------------------
+
+# one column per type: the literal is NOT NULL (nested fields and array
+# elements too), the ``if`` twin is nullable
+MEMO_TYPES = {
+    "string": "'a b'",
+    "bigint": "cast(7 as bigint)",
+    "double": "1.5d",
+    "decimal": "cast(12.345 as decimal(20, 3))",
+    "date": "date'2024-01-02'",
+    "timestamp": "timestamp'2024-01-02 03:04:05.678'",
+    "timestamp_ntz": "timestamp_ntz'2024-01-02 03:04:05'",
+    "binary": "x'00ff'",
+    "boolean": "true",
+    "array": "array(1, 2)",
+    "map": "map('k', 1.5d)",
+    "struct": "named_struct('a', 1, 'b', array('x'), 'c', map(1, date'2024-01-01'))",
+}
+
+
+def memo_frame(spark, expr):
+    return spark.range(3).selectExpr(
+        "id", f"{expr} AS v", f"if(id = 1, null, {expr}) AS v_or_null"
+    )
+
+
+@pytest.mark.parametrize("kind", sorted(MEMO_TYPES))
+def test_schema_memo_matches_inference(engine, spark, kind):
+    """The memo serves a table's schema with no Spark job, and it equals
+    what a fresh parquet schema inference of the dir reports."""
+    df = memo_frame(spark, MEMO_TYPES[kind])
+    assert not df.schema["v"].nullable  # the NOT NULL case is exercised
+    engine.save_table(df, "m")
+    engine.save_table(df, "m", mode="append")
+    tdir = engine.table_dir("m")
+    t, jobs = spark_jobs(spark, lambda: engine.table("m"))
+    assert jobs == 0
+    fresh = spark.read.parquet(tdir)
+    assert t.schema == fresh.schema
+    assert sorted(map(str, t.collect())) == sorted(map(str, fresh.collect()))
+
+
+def test_schema_memo_reinfers_foreign_overwrite(engine, spark, tmp_path):
+    engine.save_table(spark.range(2).selectExpr("id"), "f")
+    tdir = engine.table_dir("f")
+    other = str(tmp_path / "other")
+    spark.range(3).selectExpr("cast(id as string) AS id", "'x' AS extra").write.parquet(other)
+    os.rename(tdir, str(tmp_path / "aside"))
+    os.rename(other, tdir)
+    t = engine.table("f")
+    assert t.schema == spark.read.parquet(tdir).schema
+    assert sorted(r.id for r in t.collect()) == ["0", "1", "2"]
+
+
+def test_schema_memo_reinfers_foreign_append(engine, spark):
+    engine.save_table(spark.range(2).selectExpr("id"), "f")
+    tdir = engine.table_dir("f")
+    spark.range(2).selectExpr("cast(id as string) AS id", "'x' AS extra").write.mode(
+        "append"
+    ).parquet(tdir)
+    _, jobs = spark_jobs(spark, lambda: engine.table("f").schema)
+    assert jobs >= 1  # re-inferred, not served from the memo
+    assert engine.table("f").schema == spark.read.parquet(tdir).schema
+
+
+def test_schema_memo_append_rules(engine, spark):
+    """An engine append keeps the entry when the schemas differ only in
+    nullability, and drops it when they differ otherwise."""
+    engine.save_table(spark.range(2).selectExpr("id", "'a' AS v"), "a")
+    engine.save_table(
+        spark.range(2).selectExpr("id", "if(id = 0, null, 'b') AS v"), "a", mode="append"
+    )
+    _, jobs = spark_jobs(spark, lambda: engine.table("a").schema)
+    assert jobs == 0
+    engine.save_table(spark.range(2).selectExpr("id", "1.5d AS v"), "a", mode="append")
+    assert engine.table_dir("a") not in engine._schemas  # noqa: SLF001
+    assert engine.table("a").schema == spark.read.parquet(engine.table_dir("a")).schema
+
+
+def test_partitioned_table_is_never_memoised(engine, spark):
+    df = spark.range(4).selectExpr("id", "id % 2 AS p")
+    engine.save_table(df, "p", partition_by=["p"])
+    assert engine.table_dir("p") not in engine._schemas  # noqa: SLF001
+    engine.save_table(df, "p", mode="append", partition_by=["p"])
+    assert engine.table_dir("p") not in engine._schemas  # noqa: SLF001
+    engine.save_table(df, "flat")
+    engine.save_table(df, "flat", mode="append", partition_by=["p"])
+    assert engine.table_dir("flat") not in engine._schemas  # noqa: SLF001
+    assert engine.table("p").count() == 8
+
+
+def test_schema_memo_follows_rename_and_drop(engine, spark):
+    engine.save_table(spark.range(2).selectExpr("id"), "r1")
+    engine.rename_table("r1", "r2")
+    assert engine.table_dir("r1") not in engine._schemas  # noqa: SLF001
+    t, jobs = spark_jobs(spark, lambda: engine.table("r2"))
+    assert jobs == 0 and t.count() == 2
+    engine.drop_table("r2")
+    assert engine.table_dir("r2") not in engine._schemas  # noqa: SLF001
+
+
+def test_empty_frame_keeps_the_schema(spark):
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType(), False),
+        T.StructField("tags", T.ArrayType(T.StringType(), False)),
+        T.StructField("amt", T.DecimalType(12, 2)),
+    ])
+    df = empty_frame(spark, schema)
+    assert df.schema == schema
+    assert df.collect() == []

@@ -98,6 +98,33 @@ def test_create_from_ct(engine, home):
     assert [f.name for f in t.schema.fields] == ["id", "name"]
 
 
+def test_create_table_schema_is_the_ct_schema(engine, home):
+    """The created table has the .ct schema, every field nullable as
+    parquet reads report it, including NOT NULL columns."""
+    from pyspark.sql import types as T
+
+    (home / "subsys" / "typed.ct").write_text(
+        "create table $dest_table\n( id bigint not null\n, amt decimal(12,2)\n"
+        ", d date not null\n, ts timestamp\n, ok boolean\n, s varchar(8)\n)\n;\n"
+    )
+    r = run_job(
+        engine, home, "typed.job",
+        "class: create\ndest-table: typed\ntable-def: typed.ct\n",
+    )
+    assert r.success
+    assert engine.table("typed").schema == T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("amt", T.DecimalType(12, 2)),
+        T.StructField("d", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ok", T.BooleanType()),
+        T.StructField("s", T.StringType()),
+    ])
+    fresh = engine.spark.read.parquet(engine.table_dir("typed"))
+    assert engine.table("typed").schema == fresh.schema
+    assert fresh.count() == 0
+
+
 def test_sql_job_embedded(engine, home):
     """.sql.job with embedded YAML header — reference insert.sql.job shape."""
     r = run_job(

@@ -16,6 +16,7 @@ from bricolage_spark.streaming.streaming_load import (
     compile_name_pattern,
     format_path,
 )
+from conftest import spark_jobs
 
 
 def test_compile_name_pattern_reference_case():
@@ -364,3 +365,92 @@ def test_custom_sql_does_not_force_dest_schema_on_raw_files(
     assert stats["rows"] == 2
     out = {r.user: r.total for r in engine.table("agg_dest").collect()}
     assert out == {1: 4.0, 2: 4.0}
+
+
+def test_warm_memo_sees_rows_recover_rolls_forward(engine, spark, tmp_path, queue_dir):
+    """test_crash_between_appends_rolls_forward with a warm schema memo:
+    an earlier batch published dest and log, so the engine knows both
+    schemas when the next batch dies at the commit point. The rows that
+    recover() rolls forward are visible through the engine."""
+    write_files(queue_dir, {"20240101_0000_00.json": ['{"x": 1, "y": "a"}']})
+    loader = make_loader(engine, queue_dir, tmp_path)
+    assert loader.run_once()["loaded_files"] == 1
+    for t in ("load_test", "load_test_l"):
+        assert engine.table_dir(t) in engine._schemas  # noqa: SLF001
+
+    write_files(queue_dir, {"20240101_0100_00.json": ['{"x": 2, "y": "b"}']})
+
+    def crash(_moves):
+        raise RuntimeError("killed between appends")
+
+    orig = loader._apply_moves
+    loader._apply_moves = crash
+    with pytest.raises(RuntimeError):
+        loader.run_once()
+    loader._apply_moves = orig
+    assert engine.table("load_test").count() == 1  # not published yet
+
+    assert loader.recover() == 1
+    assert sorted(r.x for r in engine.table("load_test").collect()) == [1, 2]
+    assert sorted(r.x for r in spark.sql("select x from load_test").collect()) == [1, 2]
+    logged = {r.data_file for r in engine.table("load_test_l").collect()}
+    assert logged == {"20240101_0000_00.json", "20240101_0100_00.json"}
+    stats = loader.run_once()
+    assert (stats["loaded_files"], stats["skipped_files"]) == (0, 1)
+
+
+def test_steady_state_batch_starts_at_most_four_jobs(engine, spark, tmp_path, queue_dir):
+    """From the third batch on, run_once is the log lookup plus the
+    work, dest-delta and log-delta writes: no schema inference job."""
+    loader = make_loader(engine, queue_dir, tmp_path)
+    for b in range(4):
+        write_files(queue_dir, {
+            f"20240101_0{b}00_{i:02d}.json": [f'{{"x": {3 * b + i}, "y": "v"}}']
+            for i in range(3)
+        })
+        stats, jobs = spark_jobs(spark, loader.run_once)
+        assert stats["loaded_files"] == 3
+        if b >= 2:
+            assert jobs <= 4, f"batch {b} started {jobs} Spark jobs"
+    assert sorted(r.x for r in engine.table("load_test").collect()) == list(range(12))
+
+
+def test_new_files_matches_set_difference_oracle(engine, spark, tmp_path, queue_dir):
+    import random
+
+    names = [
+        f"20240101_0000_{i:04d} it's.json" if i % 3 == 0 else f"20240101_0000_{i:04d}.json"
+        for i in range(2000)
+    ]
+    logged = names[::2] + [f"history {i}'.json" for i in range(50)]
+    engine.save_table(
+        spark.createDataFrame([(n,) for n in logged], "data_file string"), "load_test_l"
+    )
+    candidates = [str(queue_dir / n) for n in names]
+    random.Random(7).shuffle(candidates)
+    loader = make_loader(engine, queue_dir, tmp_path)
+    done = set(logged)
+    oracle = [p for p in candidates if os.path.basename(p) not in done]
+    assert len(oracle) == 1000
+    assert loader.new_files(candidates) == oracle
+
+
+def test_dequeue_only_moves_just_the_logged_files(engine, tmp_path, queue_dir):
+    write_files(queue_dir, {"20240101_0000_00.json": ['{"x": 1, "y": "a"}']})
+    make_loader(engine, queue_dir, tmp_path).run_once(load_only=True)
+    write_files(queue_dir, {"20240101_0100_00.json": ['{"x": 2, "y": "b"}']})
+    home = tmp_path / "home"
+    (home / "subsys").mkdir(parents=True)
+    job_path = home / "subsys" / "deq.job"
+    job_path.write_text(
+        "class: streaming_load\n"
+        "dest-table: load_test\n"
+        f"queue-path: {queue_dir}\n"
+        f"persistent-path: {tmp_path}/done/%Y/%m/%d\n"
+        "file-name: '%Y%m%d_%H%M_%Q.json'\n"
+        "dequeue-only: true\n"
+    )
+    r = Context(engine, home=str(home)).load_job(str(job_path)).execute()
+    assert r.message == "dequeued 1 file(s)"
+    assert (tmp_path / "done" / "2024" / "01" / "01" / "20240101_0000_00.json").exists()
+    assert sorted(os.listdir(queue_dir)) == ["20240101_0100_00.json"]
