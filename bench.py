@@ -21,23 +21,18 @@ Two configurations are measured (plus the DuckDB oracle column):
   counts at runtime. The tuned block quantifies that harness floor —
   it is NOT an engine default and is labeled accordingly.
 
-Two measurement PROTOCOLS (``--protocol``):
-
-- ``interleaved`` (DEFAULT since round 15): for EACH query, the
-  default-conf runs, tuned-conf runs, and DuckDB-oracle runs execute
-  back-to-back — same-minute, not same-quarter-hour — so host-load
-  drift cancels in the published ratios. Motivation (r14 verdict):
-  three same-code block-mode runs read 50.9 / 67.9 / 98.6 s on the
-  default block while tuned and DuckDB held flat — the AQE block's
-  stage-by-stage scheduling pays the host's contended floor per stage,
-  and a block design lets minutes of drift accumulate between the
-  numerator and denominator of the gate ratio. The two Spark confs
-  share one session (both differ only in runtime-settable SQL confs,
-  toggled per measurement); artifacts are staged ONCE and the single
-  build cost is reported in ``artifact_build``.
-- ``block``: the historical design — each conf in its own fresh
-  SparkSession, whole inventory per block, DuckDB last. Kept for
-  continuity with the pinned BASELINE.md tables (r1–r14).
+One measurement PROTOCOL, ``interleaved`` (recorded as ``"protocol"``
+on the detail line): for EACH query, the default-conf runs, tuned-conf
+runs, and DuckDB-oracle runs execute back-to-back — same-minute, not
+same-quarter-hour — so host-load drift cancels in the published ratios.
+Motivation (r14 verdict): three same-code runs of the retired block
+protocol (each conf a fresh session over the whole inventory, DuckDB
+last) read 50.9 / 67.9 / 98.6 s on the default block while tuned and
+DuckDB held flat — a block design lets minutes of drift accumulate
+between the numerator and denominator of the gate ratio. The two Spark
+confs share one session (both differ only in runtime-settable SQL confs,
+toggled per measurement); artifacts are staged ONCE and the single
+build cost is reported in ``artifact_build``.
 
 Each query executes fully via the no-op sink (write.format("noop")) so
 timing covers the whole plan — scan, shuffle, agg — without collect/
@@ -51,10 +46,10 @@ Honesty notes encoded in the output:
   corpus artifact (shingle index tables, verified-pair table, cluster
   assignments, IVF index, PMI unigrams, percentile brackets, hot-key
   stats) — exactly what a production pipeline materializes to storage
-  between stages. Every cache is released at the start of each block and
+  between stages. Every cache is released at the start of the run and
   ALL artifacts are then rebuilt explicitly, with the total charged to
-  the block's ``artifact_build`` row — so no query's measured time
-  depends on run order, and the serve-vs-build split is deterministic.
+  the ``artifact_build`` row — so no query's measured time depends on
+  run order, and the serve-vs-build split is deterministic.
 
 The DuckDB oracles are timed on the same tables in the same invocation
 BY DEFAULT whenever duckdb is importable (the BASELINE.md same-run
@@ -157,34 +152,6 @@ def sf_of(path: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def bench_block(
-    specs, sf_dir: str, extra_conf: dict | None, n_runs: int
-) -> tuple[dict[str, float], float]:
-    """One config block in a fresh session; returns (best_times, build_sec)."""
-    from bricolage_spark.queries import llm_ops
-    from bricolage_spark.session import get_spark, stop_spark
-
-    stop_spark()
-    spark = get_spark("bench", extra_conf=extra_conf)
-    llm_ops.release_caches()
-    # warm-up: JVM, codegen, parquet footer caches
-    specs["q05_tpch_q1"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # explicit artifact-build step, its own labeled cost: every staged
-    # query's timed runs below are pure SERVE time regardless of order
-    t0 = time.perf_counter()
-    llm_ops.stage_artifacts(spark, sf_dir)
-    build_sec = round(time.perf_counter() - t0, 3)
-    times: dict[str, float] = {}
-    for name, spec in sorted(specs.items()):
-        best = float("inf")
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        times[name] = round(best, 3)
-    return times, build_sec
-
-
 def duckdb_connect(sf_dir: str):
     """DuckDB connection with the testdata tables registered as views."""
     import duckdb
@@ -198,21 +165,6 @@ def duckdb_connect(sf_dir: str):
             f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{table_path(sf_dir, t)}')"
         )
     return con
-
-
-def run_duckdb(specs, sf_dir: str, n_runs: int) -> dict[str, float]:
-    con = duckdb_connect(sf_dir)
-    times: dict[str, float] = {}
-    for name, spec in sorted(specs.items()):
-        if spec.oracle is None:
-            continue
-        best = float("inf")
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            con.sql(spec.oracle).fetchall()
-            best = min(best, time.perf_counter() - t0)
-        times[name] = round(best, 3)
-    return times
 
 
 def bench_interleaved(
@@ -231,10 +183,7 @@ def bench_interleaved(
     shuffle.partitions) are runtime-settable SQL confs, toggled per
     measurement. Artifacts are staged ONCE (under default conf, before the
     loop); both Spark columns serve from the same staged tables, and the
-    single build cost is the returned ``build_sec`` — the block protocol
-    instead re-stages per block, which is the one intended difference
-    between the designs (per-query serve times are the same statistic in
-    both).
+    single build cost is the returned ``build_sec``.
 
     Returns (default_times, tuned_times, duckdb_times, build_sec); the
     dicts for skipped columns (mode/--no-duckdb) come back empty.
@@ -381,24 +330,17 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
             "captures only a small stdout tail)."
         ),
         epilog=(
-            "Protocols: 'interleaved' (default) measures default-conf / "
-            "tuned-conf / DuckDB back-to-back PER QUERY in one session, so "
-            "host drift cancels in the ratios; 'block' is the historical "
-            "design (each conf a fresh session over the whole inventory, "
-            "DuckDB last — minutes apart, drift-sensitive). Confs: "
-            "DEFAULT = engine defaults (AQE on); TUNED = " + _TUNED_LABEL
+            "Protocol: interleaved — default-conf / tuned-conf / DuckDB "
+            "measured back-to-back PER QUERY in one session, so host "
+            "drift cancels in the ratios. Confs: DEFAULT = engine "
+            "defaults (AQE on); TUNED = " + _TUNED_LABEL
         ),
     )
+    p.set_defaults(protocol="interleaved")
     p.add_argument(
         "--no-duckdb",
         action="store_true",
         help="skip the same-run DuckDB oracle column (isolating Spark timings)",
-    )
-    p.add_argument(
-        "--protocol",
-        choices=["interleaved", "block"],
-        default=os.environ.get("SPARK_GRAFT_BENCH_PROTOCOL", "interleaved"),
-        help="measurement protocol (default: interleaved; env SPARK_GRAFT_BENCH_PROTOCOL)",
     )
     p.add_argument(
         "--mode",
@@ -438,80 +380,45 @@ def main() -> None:
     }
 
     out: dict = {"unit": "sec", "sf": sf_of(SF_DIR), "protocol": args.protocol}
-    if args.protocol == "interleaved":
-        d_times, t_times, dd_times, build_sec = bench_interleaved(
-            specs, SF_DIR, tuned_conf, n_runs, mode, with_duckdb
+    d_times, t_times, dd_times, build_sec = bench_interleaved(
+        specs, SF_DIR, tuned_conf, n_runs, mode, with_duckdb
+    )
+    proto_note = (
+        "; INTERLEAVED protocol: default/tuned/duckdb measured "
+        "back-to-back per query, one shared session + artifact stage"
+    )
+    if mode in ("default", "both"):
+        out["metric"] = (
+            f"sum of per-query best-of-{n_runs} wall sec, full query "
+            "inventory (noop sink, warm session, ENGINE-DEFAULT conf: "
+            "AQE on" + proto_note + ")"
         )
-        proto_note = (
-            "; INTERLEAVED protocol: default/tuned/duckdb measured "
-            "back-to-back per query, one shared session + artifact stage"
-        )
-        if mode in ("default", "both"):
+        out["value"] = round(sum(d_times.values()), 3)
+        out["queries"] = d_times
+        out["artifact_build"] = build_sec
+        out["artifact_build_detail"] = _LAST_STAGE_DETAIL
+    if mode in ("tuned", "both"):
+        tuned = {
+            "conf": _TUNED_LABEL,
+            "total": round(sum(t_times.values()), 3),
+            "queries": t_times,
+            # one shared stage serves both confs in this protocol
+            "artifact_build": build_sec,
+        }
+        if mode == "tuned":
             out["metric"] = (
                 f"sum of per-query best-of-{n_runs} wall sec, full query "
-                "inventory (noop sink, warm session, ENGINE-DEFAULT conf: "
-                "AQE on" + proto_note + ")"
+                "inventory (noop sink, warm session, TUNED conf"
+                + proto_note + ")"
             )
-            out["value"] = round(sum(d_times.values()), 3)
-            out["queries"] = d_times
+            out["value"] = tuned["total"]
+            out["queries"] = t_times
             out["artifact_build"] = build_sec
-            out["artifact_build_detail"] = _LAST_STAGE_DETAIL
-        if mode in ("tuned", "both"):
-            tuned = {
-                "conf": _TUNED_LABEL,
-                "total": round(sum(t_times.values()), 3),
-                "queries": t_times,
-                # one shared stage serves both confs in this protocol
-                "artifact_build": build_sec,
-            }
-            if mode == "tuned":
-                out["metric"] = (
-                    f"sum of per-query best-of-{n_runs} wall sec, full query "
-                    "inventory (noop sink, warm session, TUNED conf"
-                    + proto_note + ")"
-                )
-                out["value"] = tuned["total"]
-                out["queries"] = t_times
-                out["artifact_build"] = build_sec
-            else:
-                out["tuned"] = tuned
-        if with_duckdb:
-            out["duckdb_queries"] = dd_times
-            out["duckdb_total"] = round(sum(dd_times.values()), 3)
-    else:
-        if mode in ("default", "both"):
-            times, build_sec = bench_block(specs, SF_DIR, None, n_runs)
-            out["metric"] = (
-                f"sum of per-query best-of-{n_runs} wall sec, full query "
-                "inventory (noop sink, warm session, ENGINE-DEFAULT conf: "
-                "AQE on)"
-            )
-            out["value"] = round(sum(times.values()), 3)
-            out["queries"] = times
-            out["artifact_build"] = build_sec
-        if mode in ("tuned", "both"):
-            t_times, t_build = bench_block(specs, SF_DIR, tuned_conf, n_runs)
-            tuned = {
-                "conf": _TUNED_LABEL,
-                "total": round(sum(t_times.values()), 3),
-                "queries": t_times,
-                "artifact_build": t_build,
-            }
-            if mode == "tuned":
-                out["metric"] = (
-                    f"sum of per-query best-of-{n_runs} wall sec, full query "
-                    "inventory (noop sink, warm session, TUNED conf)"
-                )
-                out["value"] = tuned["total"]
-                out["queries"] = t_times
-                out["artifact_build"] = t_build
-            else:
-                out["tuned"] = tuned
-        if with_duckdb:
-            out["duckdb_queries"] = run_duckdb(specs, SF_DIR, n_runs)
-            # sum of per-query bests — the SAME statistic as the Spark
-            # totals, so the ratio compares like with like.
-            out["duckdb_total"] = round(sum(out["duckdb_queries"].values()), 3)
+        else:
+            out["tuned"] = tuned
+    if with_duckdb:
+        out["duckdb_queries"] = dd_times
+        out["duckdb_total"] = round(sum(dd_times.values()), 3)
     out["staged_artifact_queries"] = list(STAGED)
     print(json.dumps(out))
     sys.stdout.flush()

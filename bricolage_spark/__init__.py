@@ -10,8 +10,9 @@ A from-scratch re-expression of the capabilities of bricolages/bricolage
   rebuilt idiomatically in Python (see ``sqltext``, ``jobs/``, ``jobnet``,
   ``taskqueue``).
 - **Scale extensions**: LLM-data-pipeline operators (dedup, similarity
-  search, text analysis, multimodal plumbing) designed partition-parallel
-  for 100 TB workloads (see ``operators/``).
+  search, text analysis) designed partition-parallel for 100 TB
+  workloads, as Catalyst expressions with no Python worker on a batch
+  data path (see ``operators/``).
 """
 
 __version__ = "0.1.0"

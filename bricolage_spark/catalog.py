@@ -109,7 +109,7 @@ def load_testdata(
     return out
 
 
-def spread(df: DataFrame, *cols: str, cap: int | None = None) -> DataFrame:
+def spread(df: DataFrame, *cols: str) -> DataFrame:
     """Ensure enough partitions to use every core before CPU-heavy stages.
 
     The driver testdata is one single-row-group parquet per table, so a
@@ -118,15 +118,8 @@ def spread(df: DataFrame, *cols: str, cap: int | None = None) -> DataFrame:
     splits and this is a no-op (the partition-count check): the
     repartition only fires when the input is under-partitioned relative
     to the cluster.
-
-    ``cap`` bounds the fan-out for stages with high per-partition fixed
-    cost (Python worker spin-up in mapInPandas): small inputs get fewer,
-    fuller Arrow batches.
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if cap is not None:
-        target = min(target, cap)
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, *cols) if cols else df.repartition(target)

@@ -7,9 +7,12 @@ Maps the reference's PSQLTask verb set (lib/bricolage/psqldatasource.rb
   ``{warehouse}/{schema}/{name}`` registered as temp view
   ``schema__name`` (and plain ``name`` for the default schema);
 - multi-statement transactionality (psqldatasource.rb:386-390) becomes a
-  **stage-and-swap writer**: write to ``<table>.__stage__``, then an
-  atomic directory rename into place — readers never see partial data,
-  a crash leaves the old table intact;
+  **stage-and-swap writer**: write to ``<table>.__stage__``, then move
+  the live dir aside to ``<table>.__old__`` and rename the stage into
+  place — readers never see partial data. A crash between the two
+  renames leaves the dir missing and its ``__old__`` sibling complete;
+  the next open of the table renames that sibling back, so the old
+  table survives wherever the crash lands;
 - ``truncate`` / ``drop`` / ``rename_table`` / ``analyze`` / ``vacuum``
   (compaction) keep their reference semantics;
 - a **schema memo** keeps table metadata off the per-read path: the
@@ -26,6 +29,7 @@ import json
 import os
 import re
 import shutil
+import threading
 import uuid
 
 from pyspark.errors import AnalysisException
@@ -98,6 +102,25 @@ def _nullable(t: T.DataType) -> T.DataType:
     return t
 
 
+_OLD = ".__old__"  # suffix of a live dir moved aside by a swap
+
+
+def _old_siblings(path: str) -> list[str]:
+    """The ``<path>.__old__*`` dirs a swap of ``path`` left behind."""
+    parent, base = os.path.split(path)
+    if not os.path.isdir(parent):
+        return []
+    return [os.path.join(parent, n) for n in os.listdir(parent) if n.startswith(base + _OLD)]
+
+
+def _drop_old_siblings(path: str) -> None:
+    """Remove the ``__old__`` leftovers of a live ``path`` (a swap cut
+    short while deleting them), so a later drop or rename of ``path``
+    never lets ``SparkEngine._recovered`` bring one back."""
+    for stale in _old_siblings(path):
+        shutil.rmtree(stale, ignore_errors=True)
+
+
 def _dir_token(path: str) -> tuple[int, int] | None:
     try:
         st = os.stat(path)
@@ -154,16 +177,50 @@ class SparkEngine:
         # after the write it describes and any later write changes it,
         # so a lost update only costs one re-inference
         self._schemas: dict[str, tuple[tuple[int, int], T.StructType]] = {}
+        # serialises the two renames of a swap against a rollback, so a
+        # job opening a table mid-swap never mistakes it for a crash
+        self._swap_lock = threading.Lock()
         os.makedirs(warehouse, exist_ok=True)
 
     # -- paths / catalog ----------------------------------------------------
 
     def table_dir(self, spec: TableSpec | str) -> str:
         spec = TableSpec.parse(spec) if isinstance(spec, str) else spec
-        return os.path.join(self.warehouse, spec.schema, spec.name)
+        return self._recovered(os.path.join(self.warehouse, spec.schema, spec.name))
 
     def table_exists(self, spec: TableSpec | str) -> bool:
         return os.path.isdir(self.table_dir(spec))
+
+    # -- crash-recoverable swap ---------------------------------------------
+
+    def _swap_in(self, stage: str, final: str) -> None:
+        """Move the complete dir ``stage`` into place at ``final``: the
+        live ``final`` (if any) is renamed to a ``final.__old__<id>``
+        sibling first and removed only after the stage is in place."""
+        if os.path.isdir(final):
+            _drop_old_siblings(final)
+        old = None
+        with self._swap_lock:
+            if os.path.exists(final):
+                old = f"{final}{_OLD}{uuid.uuid4().hex[:8]}"
+                os.rename(final, old)
+            os.rename(stage, final)
+        if old is not None:
+            shutil.rmtree(old, ignore_errors=True)
+
+    def _recovered(self, path: str) -> str:
+        """``path``, after rolling back a swap that stopped between its
+        two renames: when the dir is missing and exactly one
+        ``<path>.__old__*`` sibling exists, that sibling (the last
+        complete table) is renamed back into place."""
+        if os.path.isdir(path):
+            return path
+        with self._swap_lock:
+            if not os.path.isdir(path):
+                olds = _old_siblings(path)
+                if len(olds) == 1:
+                    os.rename(olds[0], path)
+        return path
 
     # -- schema memo ---------------------------------------------------------
 
@@ -233,15 +290,12 @@ class SparkEngine:
             sdir = os.path.join(self.warehouse, schema)
             if not os.path.isdir(sdir):
                 continue
-            for name in sorted(os.listdir(sdir)):
-                # skip engine-internal sibling dirs: <t>.__bucketed__ data
-                # dirs and any stale <t>.__stage__/<t>.__old__ left by a
-                # crash — dotted names are not valid temp-view names and
-                # none of these are user tables.
-                if "." in name:
-                    continue
-                if os.path.isdir(os.path.join(sdir, name)):
-                    spec = TableSpec(schema, name)
+            # dotted names are engine-internal siblings (<t>.__bucketed__
+            # data dirs, <t>.__stage__/<t>.__old__ left by a crash), not
+            # tables; table_exists rolls an interrupted swap back first
+            for name in sorted({n.split(".", 1)[0] for n in os.listdir(sdir)} - {""}):
+                spec = TableSpec(schema, name)
+                if self.table_exists(spec):
                     self.register(spec)
                     names.append(str(spec))
         return names
@@ -320,11 +374,7 @@ class SparkEngine:
         if mode == "overwrite":
             stage = f"{final}.__stage__{uuid.uuid4().hex[:8]}"
             writer.mode("overwrite").parquet(stage)
-            old = f"{final}.__old__{uuid.uuid4().hex[:8]}"
-            if os.path.exists(final):
-                os.rename(final, old)
-            os.rename(stage, final)
-            shutil.rmtree(old, ignore_errors=True)
+            self._swap_in(stage, final)
             self._remember(final, schema)
         elif mode == "append":
             before = self._known_schema(final) if os.path.isdir(final) else schema
@@ -343,8 +393,10 @@ class SparkEngine:
             if force:
                 return
             raise JobFailure(f"cannot drop, no such table: {spec}")
-        self._schemas.pop(self.table_dir(spec), None)
-        shutil.rmtree(self.table_dir(spec))
+        tdir = self.table_dir(spec)
+        self._schemas.pop(tdir, None)
+        _drop_old_siblings(tdir)
+        shutil.rmtree(tdir)
         self.spark.catalog.dropTempView(spec.view_name)
 
     def truncate(self, spec: TableSpec | str) -> None:
@@ -362,6 +414,7 @@ class SparkEngine:
         src_dir, dest_dir = self.table_dir(src), self.table_dir(dest)
         known = self._known_schema(src_dir)
         self._schemas.pop(src_dir, None)
+        _drop_old_siblings(src_dir)
         os.makedirs(os.path.dirname(dest_dir), exist_ok=True)
         os.rename(src_dir, dest_dir)
         self._remember(dest_dir, known)
@@ -406,7 +459,10 @@ class SparkEngine:
     def bucketed_dir(self, spec: TableSpec | str) -> str:
         """Location of a bucketed table's files (engine-owned sibling of
         the plain parquet dir)."""
-        return self.table_dir(spec) + ".__bucketed__"
+        spec = TableSpec.parse(spec) if isinstance(spec, str) else spec
+        return self._recovered(
+            os.path.join(self.warehouse, spec.schema, spec.name) + ".__bucketed__"
+        )
 
     def bucketed_table_exists(self, spec: TableSpec | str) -> bool:
         """True when bucket FILES exist on disk — the durable fact.
@@ -708,11 +764,7 @@ class SparkEngine:
             self._write_bucket_spec(stage_loc, bucket_cols, n_buckets, sort_cols)
             self.spark.sql(f"DROP TABLE IF EXISTS {stage_name}")
             self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            old = f"{location}.__old__{uuid.uuid4().hex[:8]}"
-            if os.path.exists(location):
-                os.rename(location, old)
-            os.rename(stage_loc, location)
-            shutil.rmtree(old, ignore_errors=True)
+            self._swap_in(stage_loc, location)
             self.bucketed_table(spec, bucket_cols, n_buckets, sort_cols)
         else:
             raise ParameterError(f"unknown write mode: {mode}")

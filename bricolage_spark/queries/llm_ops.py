@@ -1,5 +1,5 @@
 """LLM-data-pipeline query inventory (SURVEY.md §2.7): dedup, similarity
-search, text analysis, multimodal plumbing — over the ``documents`` and
+search, text analysis, media metadata — over the ``documents`` and
 ``embeddings`` testdata tables.
 
 Every hash used is md5-derived so the DuckDB oracle reproduces Spark's
@@ -19,7 +19,6 @@ from bricolage_spark.catalog import read_table, spread
 from bricolage_spark.operators import curation as C
 from bricolage_spark.operators import dedup as D
 from bricolage_spark.operators import graph as G
-from bricolage_spark.operators import multimodal as M
 from bricolage_spark.operators import similarity as S
 from bricolage_spark.operators import textual as T
 from bricolage_spark.queries import QUERIES, register
@@ -816,7 +815,7 @@ def q43(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q41 multimodal binary-column pipeline (Arrow-batched mapInPandas)
+# q41 media metadata projection (binary payload column, pure Catalyst)
 # --------------------------------------------------------------------------
 @register(
     "q41_multimodal_features",
@@ -827,18 +826,19 @@ def q43(spark: SparkSession, sf_dir: str) -> DataFrame:
            md5(text)                                     AS digest
     FROM documents
     """,
-    doc="Binary media column + typed metadata through an Arrow-batched "
-    "mapInPandas decode/feature stage (decode is a documented "
-    "deterministic stub — codecs absent in this container). Feature "
-    "vector column is dropped for the oracle projection; full schema is "
-    "pytest-verified.",
+    doc="Typed metadata of a binary media column: each document's utf-8 "
+    "bytes are the payload, projected to id, media type, byte length and "
+    "md5 digest in one Catalyst select (no Python worker). A NULL text "
+    "gives NULL byte_len and digest.",
 )
 def q41(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    # cap=8: python-worker spin-up dominates below ~1k rows/partition
-    media = M.documents_as_media(spread(docs, "doc_id", cap=8))
-    feats = M.extract_features(media, dim=8)
-    return feats.select("media_id", "media_type", "byte_len", "digest")
+    payload = F.encode(F.col("text"), "utf-8")
+    return read_table(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("long").alias("media_id"),
+        F.lit("text/plain").alias("media_type"),
+        F.octet_length(payload).cast("long").alias("byte_len"),
+        F.md5(payload).alias("digest"),
+    )
 
 
 # --------------------------------------------------------------------------

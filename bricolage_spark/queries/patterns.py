@@ -359,7 +359,7 @@ def q47(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Q55 batch sessionization (gap-based sessions — batch twin of
-# streaming/stateful.py's applyInPandasWithState sessionizer)
+# the streaming sessionizer in streaming/stateful.py)
 # --------------------------------------------------------------------------
 _SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
 
@@ -398,8 +398,8 @@ _SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
     "numbers them, one aggregation summarizes — all windows partitioned "
     "by user_id (the natural key; never a global-order window), ties "
     "broken by event_id for cross-engine determinism. The streaming twin "
-    "(streaming/stateful.py) holds the same session state in "
-    "applyInPandasWithState.",
+    "(streaming/stateful.py) holds the same session state as "
+    "per-user group state.",
 )
 def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window

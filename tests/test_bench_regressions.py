@@ -179,7 +179,7 @@ def test_cli_help_and_unknown_flag(tmp_path):
         [_sys.executable, bench, "--help"], capture_output=True, timeout=60
     )
     assert r.returncode == 0
-    assert b"interleaved" in r.stdout and b"block" in r.stdout
+    assert b"interleaved" in r.stdout
     r = subprocess.run(
         [_sys.executable, bench, "--duckdb"], capture_output=True, timeout=60
     )
@@ -194,8 +194,7 @@ def test_cli_defaults():
     assert args.mode == "both"
     assert args.runs == 3
     assert args.no_duckdb is False
-    args = b.parse_args(["--protocol", "block", "--no-duckdb", "--runs", "1"])
-    assert args.protocol == "block"
+    args = b.parse_args(["--no-duckdb", "--runs", "1"])
     assert args.no_duckdb is True
     assert args.runs == 1
 

@@ -190,3 +190,97 @@ def test_crash_between_registry_append_and_queue_save_heals_on_rerun(
     )
     span = engine.bucketed_table("crawl_span_registry", "ahash", 4)
     assert span.count() == span.select("ahash").distinct().count()
+
+
+# -- a kill inside the writers' stage-and-swap --------------------------------
+#
+# Both warehouse writers (save_table, save_table_bucketed) overwrite by
+# moving the live dir aside to <dir>.__old__ and then renaming the stage
+# into place. A kill between the two renames leaves the dir missing; the
+# next open must roll the __old__ sibling back, or the follow-up write
+# sees "no table" and keeps only its own rows.
+
+
+def _kill_at_second_swap_rename(monkeypatch):
+    import bricolage_spark.engine as E
+
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if ".__stage__" in os.path.basename(src):
+            raise SimulatedKill(f"killed before {src} -> {dst}")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(E.os, "rename", rename)
+
+
+def test_save_table_killed_mid_swap_keeps_every_row_for_insert_delta(
+    spark, tmp_path, monkeypatch
+):
+    engine = SparkEngine(spark, str(tmp_path / "warehouse"))
+    home = tmp_path / "home"
+    (home / "subsys").mkdir(parents=True)
+    (home / "config").mkdir()
+    (home / "config" / "variable.yml").write_text("test_schema: default\n")
+    schema = "id int, d string"
+    old_rows = [(1, "2024-01-01"), (2, "2024-01-01"), (3, "2024-01-02")]
+    engine.save_table(spark.createDataFrame(old_rows, schema), "acc")
+    engine.save_table(
+        spark.createDataFrame([(4, "2024-01-03"), (5, "2024-01-04")], schema),
+        "src_events",
+    )
+
+    _kill_at_second_swap_rename(monkeypatch)
+    with pytest.raises(SimulatedKill):
+        engine.save_table(spark.createDataFrame([(9, "x")], schema), "acc")
+    monkeypatch.undo()
+
+    job = home / "subsys" / "delta.sql.job"
+    job.write_text(
+        "/*\nclass: insert-delta\ndest-table: acc\n"
+        "src-tables: {s: src_events}\ndelete-cond: \"d = '2024-01-03'\"\n*/\n"
+        "select * from $s where d = '2024-01-03';\n"
+    )
+    Context(engine, home=str(home)).load_job(str(job)).execute()
+    got = sorted(map(tuple, engine.table("acc").collect()))
+    assert got == sorted(old_rows + [(4, "2024-01-03")])
+    parent = os.path.dirname(engine.table_dir("acc"))
+    assert not [n for n in os.listdir(parent) if n.startswith("acc.__old__")]
+
+
+def test_save_table_bucketed_killed_mid_swap_keeps_the_registry(
+    spark, tmp_path, monkeypatch
+):
+    """The bucketed writer's follow-up is the span registry's append
+    (insert-delta reads plain tables only): with the registry dir gone,
+    ``span_registry_prior`` would report "no history" and the append
+    would seed a registry holding only the new batch."""
+    from pyspark.sql import functions as SF
+
+    from bricolage_spark.streaming.curation import (
+        span_registry_prior,
+        update_span_registry,
+    )
+
+    def hashes(lo, hi):
+        return spark.range(lo, hi).select(
+            SF.md5(SF.col("id").cast("string")).alias("ahash")
+        )
+
+    engine = SparkEngine(spark, str(tmp_path / "warehouse"))
+    table = "crash_span_registry"
+    try:
+        engine.save_table_bucketed(hashes(0, 20), table, "ahash", 4)
+        _kill_at_second_swap_rename(monkeypatch)
+        with pytest.raises(SimulatedKill):
+            engine.save_table_bucketed(hashes(0, 5), table, "ahash", 4)
+        monkeypatch.undo()
+
+        prior = span_registry_prior(engine, table, 4)
+        assert prior is not None
+        update_span_registry(engine, table, hashes(20, 25), n_buckets=4, prior=prior)
+        got = {r.ahash for r in engine.bucketed_table(table, "ahash", 4).collect()}
+        assert got == {r.ahash for r in hashes(0, 25).collect()}
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        spark.sql(f"DROP TABLE IF EXISTS {table}__stage")

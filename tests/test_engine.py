@@ -42,6 +42,61 @@ def test_overwrite_is_atomic_swap(engine, spark):
     assert [p for p in os.listdir(parent) if "__stage__" in p or "__old__" in p] == []
 
 
+def test_swap_is_never_rolled_back_mid_flight(engine):
+    """Jobs of a parallel jobnet share one engine. A job opening a table
+    while another swaps it in must not take the dir's brief absence
+    between the swap's two renames for a crash and roll the __old__
+    sibling back — the swap's second rename would then fail, or the
+    rolled-back copy would be served in place of the new one."""
+    import sys
+    import threading
+
+    finals = [engine.table_dir(f"hot{i}") for i in range(2)]
+    for d in finals:
+        os.makedirs(d)
+        open(os.path.join(d, "part"), "w").close()
+    errors: list = []
+    done = threading.Event()
+
+    def writer(final):
+        try:
+            for n in range(1000):
+                stage = f"{final}.__stage__{n}"
+                os.makedirs(stage)
+                with open(os.path.join(stage, "part"), "w") as f:
+                    f.write(str(n))
+                engine._swap_in(stage, final)
+        except OSError as e:
+            errors.append(e)
+
+    def reader():
+        while not done.is_set():
+            for i in range(2):
+                engine.table_exists(f"hot{i}")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        readers = [threading.Thread(target=reader) for _ in range(6)]
+        writers = [threading.Thread(target=writer, args=(d,)) for d in finals]
+        for t in readers + writers:
+            t.start()
+        for t in writers:
+            t.join(timeout=60)
+        done.set()
+        for t in readers:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in readers + writers)
+    assert errors == []
+    parent = os.path.dirname(finals[0])
+    assert sorted(os.listdir(parent)) == ["hot0", "hot1"]
+    for d in finals:
+        with open(os.path.join(d, "part")) as f:
+            assert f.read() == "999"
+
+
 def test_append_mode(engine, spark):
     engine.save_table(df_of(spark, [(1,)], "id int"), "t")
     engine.save_table(df_of(spark, [(2,)], "id int"), "t", mode="append")

@@ -9,7 +9,6 @@ from conftest import half_up
 from pyspark.sql import functions as F
 
 from bricolage_spark.operators import dedup as D
-from bricolage_spark.operators import multimodal as M
 from bricolage_spark.operators import similarity as S
 from bricolage_spark.operators import textual as T
 
@@ -282,24 +281,46 @@ def test_fingerprint_normalization_invariance(spark):
     assert fp[1] != fp[3]
 
 
-def test_multimodal_pipeline_schema_and_determinism(spark):
-    df = spark.createDataFrame([(1, "hello"), (2, "world")], "doc_id long, text string")
-    media = M.documents_as_media(df)
-    feats = M.extract_features(media, dim=4).collect()
-    by_id = {r.media_id: r for r in feats}
-    assert by_id[1].byte_len == 5
-    assert len(by_id[1].feature) == 4
+def test_q41_media_metadata_matches_python_reference(spark, tmp_path):
+    """q41 projects each document's utf-8 bytes to (id, media type, byte
+    length, md5 hex digest) in Catalyst; a pyarrow + hashlib reference
+    over the same parquet must agree row for row, including multibyte
+    text, the empty string and a NULL text (NULL length and digest)."""
     import hashlib
 
-    assert by_id[1].digest == hashlib.md5(b"hello").hexdigest()
-    # deterministic across runs
-    feats2 = {r.media_id: r.feature for r in M.extract_features(media, dim=4).collect()}
-    assert feats2[1] == by_id[1].feature
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
+    from bricolage_spark.queries import load_all
 
-def test_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        M.decode_stub()
+    texts = ["hello", "naïve café — 日本語 🙂", "", None, "plain\nascii"]
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(1, len(texts) + 1), pa.int64()),
+                "text": pa.array(texts, pa.string()),
+            }
+        ),
+        str(tmp_path / "documents.parquet"),
+    )
+    ref = pq.read_table(str(tmp_path / "documents.parquet")).to_pylist()
+    want = sorted(
+        (
+            r["doc_id"],
+            "text/plain",
+            None if r["text"] is None else len(r["text"].encode()),
+            None if r["text"] is None else hashlib.md5(r["text"].encode()).hexdigest(),
+        )
+        for r in ref
+    )
+    out = load_all()["q41_multimodal_features"].fn(spark, str(tmp_path))
+    assert out.columns == ["media_id", "media_type", "byte_len", "digest"]
+    assert [f.dataType.simpleString() for f in out.schema.fields] == [
+        "bigint", "string", "bigint", "string"
+    ]
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == want
+    assert want[1][2] > len(texts[1])  # multibyte text: bytes, not chars
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -1894,21 +1915,6 @@ def test_cosine_topk_zero_norm_vector_scores_not_crashes(spark):
     lsh_bucketed_topk(emb, q, k=3, dims=2).collect()  # must not raise
     cents = ivf_centroids(emb, k_cells=2, seed=1)
     ivf_topk(emb, q, cents, k=3).collect()  # must not raise
-
-
-def test_decode_media_truncated_payloads_fall_back():
-    """Truncated payloads with valid magic bytes fall back to the digest
-    feature instead of escaping the batch with struct.error."""
-    from bricolage_spark.operators.multimodal import _PNG_MAGIC, _fake_feature, decode_media
-
-    bad_wav = (
-        b"RIFF" + (28).to_bytes(4, "little") + b"WAVE"
-        + b"fmt " + (4).to_bytes(4, "little") + b"\x00" * 4
-    )
-    bad_jpg = b"\xff\xd8\xff\xc0\x00\x04\x08\x00"
-    bad_png = _PNG_MAGIC + (13).to_bytes(4, "big") + b"IHDR" + b"\x00" * 5
-    for payload in (bad_wav, bad_jpg, bad_png):
-        assert decode_media(payload) == _fake_feature(payload, 8)
 
 
 def test_connected_components_large_hash_ids_no_overflow(spark):

@@ -52,11 +52,36 @@ def simple_plans(plan_pairs):
     return {n: p[1] for n, p in plan_pairs.items()}
 
 
+# Physical operators that hand rows to a Python worker, matched as plan
+# substrings ("MapInArrow" also matches the older "PythonMapInArrow").
+# Batch queries are pure Catalyst; the one Python boundary left is the
+# streaming sessionizer (streaming/stateful.py), not a registered query.
+_PYTHON_OPERATORS = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "ArrowAggregatePython",
+    "ArrowWindowPython",
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+    "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInArrow",
+)
+
+
 def test_no_row_wise_python_udf_on_any_path(plans):
-    """Python on a data path must be Arrow-batched (ArrowEvalPython /
-    MapInPandas), never row-at-a-time BatchEvalPython."""
-    offenders = [n for n, p in plans.items() if "BatchEvalPython" in p]
-    assert not offenders, f"row-wise Python UDF in: {offenders}"
+    """No registered query's plan may run Python on its data path: not
+    row-at-a-time (BatchEvalPython) and not Arrow-batched either
+    (ArrowEvalPython, MapInPandas, PythonMapInArrow, grouped pandas or
+    Arrow maps). Each one ships every row through a Python worker, and
+    may need the package importable on the executors."""
+    offenders = {
+        n: [op for op in _PYTHON_OPERATORS if op in p]
+        for n, p in plans.items()
+        if any(op in p for op in _PYTHON_OPERATORS)
+    }
+    assert not offenders, f"Python worker operator in: {offenders}"
 
 
 def test_no_unintended_cartesian_product(plans):
